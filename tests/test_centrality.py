@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from unilever_scraping_etl_spark.operators import centrality
+from unilever_scraping_etl_spark.operators._fixpoint import LoopStats
 
 
 def _edges(spark, pairs):
@@ -75,11 +76,12 @@ def test_cycle_symmetric(spark):
 
 def test_early_exit_on_exhausted_frontier(spark):
     """A 2-path exhausts all shortest paths at distance 2; radius 10
-    must stop expanding after round 2 (diagnostic counter)."""
+    must stop expanding after round 2 (reported through stats)."""
     pairs = [(0, 1), (1, 2)]
+    st = LoopStats()
     centrality.harmonic_centrality(_edges(spark, pairs), "src", "dst",
-                                   radius=10).collect()
-    assert centrality._LAST_HC_ROUNDS == 2
+                                   radius=10, stats=st).collect()
+    assert (st.rounds, st.converged) == (2, True)
 
 
 def test_duplicate_and_null_edges_ignored(spark):

@@ -332,6 +332,19 @@ def test_semdedup_gemm_blocked_path_matches(spark, monkeypatch):
     assert any(r[3] for r in blocked)  # dups exist at this threshold
 
 
+def test_semdedup_block_env_is_validated(spark, monkeypatch):
+    """A block below 1 would leave the GEMM kernel's block loop empty
+    and return no losers at all — a silently wrong answer. The knob
+    must raise, naming the variable, instead."""
+    emb = spark.createDataFrame([(1, [1.0, 0.0]), (2, [1.0, 0.0])],
+                                "vec_id long, embedding array<double>")
+    for bad in ("-5", "0", "many"):
+        monkeypatch.setenv("SPARK_GRAFT_SEMDEDUP_BLOCK", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_SEMDEDUP_BLOCK"):
+            curation.semdedup(emb, "vec_id", "embedding", n_seeds=1,
+                              threshold=0.9, pairs="gemm").collect()
+
+
 def test_semdedup_explicit_seeds_and_validation(spark):
     emb = spark.createDataFrame(SEM_ROWS, "vec_id long, embedding array<double>")
     seeds = spark.createDataFrame([(100, [1.0, 0.0])],

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from unilever_scraping_etl_spark.operators import graph
+from unilever_scraping_etl_spark.operators._fixpoint import LoopStats
 
 
 def _edges(spark, pairs):
@@ -135,9 +136,10 @@ def test_tol_stops_early_on_cycle(spark):
     first delta probe reads 0 and tol stops the loop after ONE
     iteration despite a cap of 7."""
     pairs = [(i, (i + 1) % 5) for i in range(5)]
+    st = LoopStats()
     out = graph.pagerank(_edges(spark, pairs), "src", "dst",
-                         iterations=7, tol=0.0).collect()
-    assert graph._LAST_PR_ITERATIONS == 1
+                         iterations=7, tol=0.0, stats=st).collect()
+    assert (st.rounds, st.converged) == (1, True)
     for r in out:
         assert r["rank"] == pytest.approx(0.2, abs=1e-12)
 
@@ -149,11 +151,12 @@ def test_tol_converged_result_matches_reference(spark):
     (d=0.5 so contraction reaches 1e-8 in ~27 rounds — a deep
     un-checkpointed Spark run is not a usable comparator)."""
     pairs = [(0, 1), (1, 2), (2, 0), (0, 2), (2, 1), (1, 0)]
+    st = LoopStats()
     conv = {r["node"]: r["rank"]
             for r in graph.pagerank(_edges(spark, pairs), "src", "dst",
                                     iterations=60, tol=1e-8,
-                                    damping=0.5).collect()}
-    used = graph._LAST_PR_ITERATIONS
+                                    damping=0.5, stats=st).collect()}
+    used = st.rounds
     assert used < 60
     exact = _reference(pairs, used, d=0.5)
     fixed = _reference(pairs, 200, d=0.5)
@@ -167,11 +170,13 @@ def test_tol_with_dangling_redistribution_composes(spark):
     fold (with redistribution) at the reported iteration count, and
     mass stays 1 — node 2 dangles in this graph."""
     pairs = [(0, 1), (1, 2), (0, 2), (1, 0)]
+    st = LoopStats()
     out = {r["node"]: r["rank"]
            for r in graph.pagerank(_edges(spark, pairs), "src", "dst",
                                    iterations=60, tol=1e-8, damping=0.5,
-                                   redistribute_dangling=True).collect()}
-    used = graph._LAST_PR_ITERATIONS
+                                   redistribute_dangling=True,
+                                   stats=st).collect()}
+    used = st.rounds
     assert used < 60
     exp = _reference(pairs, used, d=0.5, redistribute_dangling=True)
     for v, r in exp.items():
@@ -182,11 +187,12 @@ def test_tol_with_dangling_redistribution_composes(spark):
 def test_tol_cap_still_binds(spark):
     """An unreachable tolerance runs exactly the cap."""
     pairs = [(0, 1), (1, 2), (2, 0), (0, 2)]
+    st = LoopStats()
     graph.pagerank(_edges(spark, pairs), "src", "dst",
-                   iterations=3, tol=0.0).collect()
+                   iterations=3, tol=0.0, stats=st).collect()
     # this graph is NOT at a fixed point after 3 rounds; tol=0 never
     # fires, so the cap binds
-    assert graph._LAST_PR_ITERATIONS == 3
+    assert (st.rounds, st.converged) == (3, False)
 
 
 def _wedges(spark, triples):
@@ -258,11 +264,12 @@ def test_weighted_composes_with_warm_start_and_tol(spark):
                                     weight_col="w").collect()}
     seed = spark.createDataFrame([(k, v) for k, v in cold.items()],
                                  "node long, rank double")
+    st = LoopStats()
     warm = {r["node"]: r["rank"]
             for r in graph.pagerank(e, "src", "dst", iterations=200,
                                     tol=1e-9, weight_col="w",
-                                    warm_start=seed).collect()}
-    assert graph._LAST_PR_ITERATIONS <= 2  # already at the fixed point
+                                    warm_start=seed, stats=st).collect()}
+    assert st.rounds <= 2  # already at the fixed point
     for v in cold:
         assert warm[v] == pytest.approx(cold[v], abs=1e-8)
 
@@ -281,12 +288,13 @@ def test_warm_start_same_fixed_point_fewer_iterations(spark):
     # the delta: five fresh links plus one new node entering the graph
     delta = [(0, 17), (5, 23), (11, 2), (40, 3), (8, 40)]
     new = list(dict.fromkeys(base + delta))
+    st_cold, st_warm = LoopStats(), LoopStats()
     cold = graph.pagerank(_edges(spark, new), "src", "dst",
-                          iterations=200, tol=1e-8)
-    i_cold = graph._LAST_PR_ITERATIONS
+                          iterations=200, tol=1e-8, stats=st_cold)
     warm = graph.pagerank(_edges(spark, new), "src", "dst",
-                          iterations=200, tol=1e-8, warm_start=prior)
-    i_warm = graph._LAST_PR_ITERATIONS
+                          iterations=200, tol=1e-8, warm_start=prior,
+                          stats=st_warm)
+    i_cold, i_warm = st_cold.rounds, st_warm.rounds
     c = {r["node"]: r["rank"] for r in cold.collect()}
     w = {r["node"]: r["rank"] for r in warm.collect()}
     assert set(w) == set(c)
@@ -465,19 +473,21 @@ def test_personalized_composes_with_weight_warm_and_tol(spark):
     triples = [(a, b, w) for a, b, w in triples if a != b]
     e = _wedges(spark, triples)
     seed = _seed(spark, [(0, 1.0), (7, 2.0)])
+    st_cold, st_warm = LoopStats(), LoopStats()
     cold = {r["node"]: r["rank"]
             for r in graph.pagerank(e, "src", "dst", iterations=200,
                                     tol=1e-9, weight_col="w",
-                                    personalize=seed).collect()}
-    i_cold = graph._LAST_PR_ITERATIONS
+                                    personalize=seed,
+                                    stats=st_cold).collect()}
     ws = spark.createDataFrame(list(cold.items()),
                                "node long, rank double")
     warm = {r["node"]: r["rank"]
             for r in graph.pagerank(e, "src", "dst", iterations=200,
                                     tol=1e-9, weight_col="w",
                                     personalize=seed,
-                                    warm_start=ws).collect()}
-    assert graph._LAST_PR_ITERATIONS < i_cold
+                                    warm_start=ws,
+                                    stats=st_warm).collect()}
+    assert st_warm.rounds < st_cold.rounds
     for v in cold:
         assert warm[v] == pytest.approx(cold[v], abs=1e-8)
 
@@ -1370,21 +1380,22 @@ def test_kcore_until_stable_cap_hit_signals(spark):
     the historical contract (monotone upper bound, no signal)."""
     import warnings
     e = _edges(spark, [(i, i + 1) for i in range(7)])
+    st = LoopStats()
     with warnings.catch_warnings():
         warnings.simplefilter("error")  # silent default: no warning
         out = graph.k_core(e, "src", "dst", k=2, rounds=1,
-                           until_stable=True).collect()
+                           until_stable=True, stats=st).collect()
     assert len(out) > 0  # the unverified upper bound (supersets)
-    assert graph._LAST_KCORE_ROUNDS == 1
-    assert graph._LAST_KCORE_CONVERGED is False
+    assert (st.rounds, st.converged) == (1, False)
     with pytest.warns(RuntimeWarning, match="k_core.*rounds cap"):
         graph.k_core(e, "src", "dst", k=2, rounds=1,
                      until_stable=True, on_cap="warn").collect()
+    st = LoopStats()
     with pytest.raises(RuntimeError, match="k_core.*rounds cap"):
         graph.k_core(e, "src", "dst", k=2, rounds=1,
-                     until_stable=True, on_cap="raise")
-    # diagnostics recorded even when the escalation raised
-    assert graph._LAST_KCORE_CONVERGED is False
+                     until_stable=True, on_cap="raise", stats=st)
+    # stats recorded even when the escalation raised
+    assert (st.rounds, st.converged) == (1, False)
     with pytest.raises(ValueError, match="on_cap"):
         graph.k_core(e, "src", "dst", k=2, on_cap="explode")
 
@@ -1395,17 +1406,17 @@ def test_kcore_until_stable_fixpoint_stays_silent(spark):
     diagnostics record the verified convergence."""
     import warnings
     e = _edges(spark, [(0, 1), (1, 2), (2, 0)])
+    st = LoopStats()
     with warnings.catch_warnings():
         warnings.simplefilter("error")
         out = graph.k_core(e, "src", "dst", k=2, rounds=5,
-                           until_stable=True, on_cap="raise").collect()
+                           until_stable=True, on_cap="raise",
+                           stats=st).collect()
     assert {r["node"] for r in out} == {0, 1, 2}
-    assert graph._LAST_KCORE_ROUNDS == 1
-    assert graph._LAST_KCORE_CONVERGED is True
+    assert (st.rounds, st.converged) == (1, True)
     # fixed-rounds runs record executed rounds, no probe => None
-    graph.k_core(e, "src", "dst", k=2, rounds=3).collect()
-    assert graph._LAST_KCORE_ROUNDS == 3
-    assert graph._LAST_KCORE_CONVERGED is None
+    graph.k_core(e, "src", "dst", k=2, rounds=3, stats=st).collect()
+    assert (st.rounds, st.converged) == (3, None)
 
 
 def test_core_number_until_stable_cap_hit_signals(spark):
@@ -1415,14 +1426,15 @@ def test_core_number_until_stable_cap_hit_signals(spark):
     converges at executed=3 and stays silent under on_cap='raise'."""
     import warnings
     e = _edges(spark, [(0, 1), (1, 2), (2, 3), (3, 4)])
+    st = LoopStats()
     with warnings.catch_warnings():
         warnings.simplefilter("error")  # silent default
         got = {r["node"]: r["core"]
                for r in graph.core_number(e, "src", "dst", rounds=1,
-                                          until_stable=True).collect()}
+                                          until_stable=True,
+                                          stats=st).collect()}
     assert got[2] == 2  # the inflated middle value — the upper bound
-    assert graph._LAST_CORE_ROUNDS == 1
-    assert graph._LAST_CORE_CONVERGED is False
+    assert (st.rounds, st.converged) == (1, False)
     with pytest.warns(RuntimeWarning, match="core_number.*rounds cap"):
         graph.core_number(e, "src", "dst", rounds=1,
                           until_stable=True, on_cap="warn").collect()
@@ -1434,10 +1446,10 @@ def test_core_number_until_stable_cap_hit_signals(spark):
         got = {r["node"]: r["core"]
                for r in graph.core_number(e, "src", "dst", rounds=8,
                                           until_stable=True,
-                                          on_cap="raise").collect()}
+                                          on_cap="raise",
+                                          stats=st).collect()}
     assert set(got.values()) == {1}  # the true P5 coreness
-    assert graph._LAST_CORE_ROUNDS == 3
-    assert graph._LAST_CORE_CONVERGED is True
+    assert (st.rounds, st.converged) == (3, True)
     with pytest.raises(ValueError, match="on_cap"):
         graph.core_number(e, "src", "dst", on_cap="loud")
 
@@ -1714,14 +1726,15 @@ def test_reachability_bowtie_toy(spark):
     raw material."""
     pairs = [(0, 1), (1, 2), (2, 1), (2, 3), (9, 10)]
     e = _edges(spark, pairs)
+    st = LoopStats()
     fw = {r["node"] for r in graph.reachability(
         e, "src", "dst", _seeds(spark, [1])).collect()}
     bw = {r["node"] for r in graph.reachability(
         e, "src", "dst", _seeds(spark, [1]),
-        direction="backward").collect()}
+        direction="backward", stats=st).collect()}
     assert fw == {1, 2, 3} and bw == {0, 1, 2}
     assert fw & bw == {1, 2}
-    assert graph._LAST_REACH_CONVERGED is True
+    assert st.converged is True
 
 
 def test_reachability_khop_form_and_seed_semantics(spark):
@@ -1730,12 +1743,14 @@ def test_reachability_khop_form_and_seed_semantics(spark):
     empty seed frame reaches nothing."""
     chain = [(i, i + 1) for i in range(6)]
     e = _edges(spark, chain)
+    st = LoopStats()
     for k in (1, 2, 4):
         got = {r["node"] for r in graph.reachability(
             e, "src", "dst", _seeds(spark, [0, 0]), rounds=k,
-            until_stable=False).collect()}
+            until_stable=False, stats=st).collect()}
         assert got == _reach_reference(chain, {0}, hops=k), k
-    assert graph._LAST_REACH_CONVERGED is None  # fixed-rounds: no probe
+        # fixed rounds: every round runs, no probe
+        assert (st.rounds, st.converged) == (k, None)
     assert graph.reachability(
         e, "src", "dst", _seeds(spark, [99])).count() == 0
     empty_seeds = spark.createDataFrame([], "s long")
@@ -1750,12 +1765,14 @@ def test_reachability_cap_hit_is_lower_bound_and_signals(spark):
     import warnings
     chain = [(i, i + 1) for i in range(5)]
     e = _edges(spark, chain)
+    st = LoopStats()
     with warnings.catch_warnings():
         warnings.simplefilter("error")
         got = {r["node"] for r in graph.reachability(
-            e, "src", "dst", _seeds(spark, [0]), rounds=2).collect()}
+            e, "src", "dst", _seeds(spark, [0]), rounds=2,
+            stats=st).collect()}
     assert got == {0, 1, 2}  # the 2-hop subset, silently
-    assert graph._LAST_REACH_CONVERGED is False
+    assert (st.rounds, st.converged) == (2, False)
     with pytest.warns(RuntimeWarning, match="reachability.*LOWER"):
         graph.reachability(e, "src", "dst", _seeds(spark, [0]),
                            rounds=2, on_cap="warn").collect()
@@ -1766,9 +1783,10 @@ def test_reachability_cap_hit_is_lower_bound_and_signals(spark):
         warnings.simplefilter("error")
         full = {r["node"] for r in graph.reachability(
             e, "src", "dst", _seeds(spark, [0]), rounds=32,
-            on_cap="raise").collect()}
+            on_cap="raise", stats=st).collect()}
     assert full == set(range(6))
-    assert graph._LAST_REACH_CONVERGED is True
+    # 5 growing rounds plus the one whose unchanged count verifies
+    assert (st.rounds, st.converged) == (6, True)
     with pytest.raises(ValueError, match="until_stable"):
         graph.reachability(e, "src", "dst", _seeds(spark, [0]),
                            until_stable=False, on_cap="raise")

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from unilever_scraping_etl_spark.operators import graph, hostgraph
+from unilever_scraping_etl_spark.operators._fixpoint import LoopStats
 
 
 def _hosts(spark, urls):
@@ -690,16 +691,17 @@ def test_streaming_incremental_rerank_composition(spark, tmp_path):
                       .withColumnRenamed("src_host", "src")
                       .withColumnRenamed("dst_host", "dst")
                       .select("src", "dst"))
+        st_cold, st_warm = LoopStats(), LoopStats()
         cold = graph.pagerank(snap_edges, "src", "dst",
-                              iterations=200, tol=1e-9)
-        i_cold = graph._LAST_PR_ITERATIONS
+                              iterations=200, tol=1e-9, stats=st_cold)
+        i_cold = st_cold.rounds
         if published is None:
             ranks, i_warm = cold, i_cold
         else:
             ranks = graph.pagerank(snap_edges, "src", "dst",
                                    iterations=200, tol=1e-9,
-                                   warm_start=published)
-            i_warm = graph._LAST_PR_ITERATIONS
+                                   warm_start=published, stats=st_warm)
+            i_warm = st_warm.rounds
             c = {r["node"]: r["rank"] for r in cold.collect()}
             w = {r["node"]: r["rank"] for r in ranks.collect()}
             assert set(w) == set(c)

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from unilever_scraping_etl_spark.operators import dedup
+from unilever_scraping_etl_spark.operators._fixpoint import LoopStats
 from unilever_scraping_etl_spark.plans.registry import QUERIES
 from unilever_scraping_etl_spark.schemas import load_table
 
@@ -591,23 +592,43 @@ def test_connected_components_local_fast_path(spark):
              + [(i + 1000, i + 1001) for i in range(90)]
              + [(7, 7), (42, 42), (13, 99), (13, 99)])
     df = spark.createDataFrame(edges, "id_a long, id_b long")
+    st = LoopStats()
     local = {(r["node"], r["component"]) for r in
-             dedup.connected_components(df, "id_a", "id_b").collect()}
-    assert dedup._LAST_CC_ROUNDS == 0  # fast path taken
+             dedup.connected_components(df, "id_a", "id_b",
+                                        stats=st).collect()}
+    assert (st.rounds, st.converged) == (0, True)  # fast path taken
     dist = {(r["node"], r["component"]) for r in
             dedup.connected_components(df, "id_a", "id_b",
-                                       local_edges=0).collect()}
-    assert dedup._LAST_CC_ROUNDS > 0   # distributed loop ran
+                                       local_edges=0, stats=st).collect()}
+    assert st.rounds > 0 and st.converged  # distributed loop ran
     assert local == dist and len(local) > 0
     # Bound is an edge-count comparison on the materialized edge list.
     dedup.connected_components(df, "id_a", "id_b",
-                               local_edges=len(edges) - 1).collect()
-    assert dedup._LAST_CC_ROUNDS > 0
+                               local_edges=len(edges) - 1,
+                               stats=st).collect()
+    assert st.rounds > 0
     dedup.connected_components(df, "id_a", "id_b",
-                               local_edges=len(edges)).collect()
-    assert dedup._LAST_CC_ROUNDS == 0
+                               local_edges=len(edges), stats=st).collect()
+    assert st.rounds == 0
     empty = spark.createDataFrame([], "id_a long, id_b long")
     assert dedup.connected_components(empty, "id_a", "id_b").count() == 0
+
+
+def test_connected_components_local_edges_env(spark, monkeypatch):
+    """SPARK_GRAFT_CC_LOCAL_EDGES: 0 disables the single-task fast
+    path; a negative or non-integer value raises, naming the
+    variable, instead of silently picking a path."""
+    import pytest
+
+    df = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    st = LoopStats()
+    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_EDGES", "0")
+    dedup.connected_components(df, "id_a", "id_b", stats=st).collect()
+    assert st.rounds > 0  # distributed loop
+    for bad in ("-1", "1e6"):
+        monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_EDGES", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_CC_LOCAL_EDGES"):
+            dedup.connected_components(df, "id_a", "id_b")
 
 
 def test_connected_components_star_variant(spark):
@@ -680,16 +701,19 @@ def test_connected_components_rounds_log_diameter(spark):
     for algo in ("pointer_jump", "star"):
         # local_edges=0 opts out of the r17 single-task fast path: this
         # test pins the DISTRIBUTED loops' round bound.
+        st = LoopStats()
         out = dedup.connected_components(edges, "id_a", "id_b",
                                          max_iterations=9, algorithm=algo,
-                                         local_edges=0)
+                                         local_edges=0, stats=st)
         assert out.filter("component = 0").count() == d + 1, algo
-        assert dedup._LAST_CC_ROUNDS == 8, (algo, dedup._LAST_CC_ROUNDS)
+        assert (st.rounds, st.converged) == (8, True), (algo, st)
     import pytest
     with pytest.raises(RuntimeError, match="did not converge"):
         dedup.connected_components(edges, "id_a", "id_b",
                                    max_iterations=3, algorithm="star",
-                                   local_edges=0)
+                                   local_edges=0, stats=st)
+    # the cap hit is recorded before the raise
+    assert (st.rounds, st.converged) == (3, False)
 
 
 def test_ivf_recall_vs_brute_force(spark):
@@ -1048,28 +1072,6 @@ def test_simhash_band_recall_complete_at_max_hamming(spark):
                   dedup.simhash_near_pairs(docs, "doc_id", "text",
                                            max_hamming=h).collect()}
         assert banded == truth, f"max_hamming={h}"
-
-
-def test_connected_components_jumps_param(spark):
-    """r16 optimization knob: extra pointer jumps per round quarter the
-    label paths on CHAIN-bound graphs (rounds ~log_{2^jumps}(d)) and
-    never change the labels. Pins the measured 8 -> 5 round drop on the
-    256-chain for jumps=2 and the jumps >= 1 validation."""
-    import pytest as _pytest
-
-    d = 256
-    edges = spark.range(d).select(
-        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b"))
-    out = dedup.connected_components(edges, "id_a", "id_b", jumps=2,
-                                     local_edges=0)
-    assert out.filter("component = 0").count() == d + 1
-    # Pin the SPEEDUP, not the exact schedule (r16 ADVICE): jumps=2
-    # must beat the 8 rounds jumps=1 needs on this chain; any
-    # convergence-check or init change that keeps labels right and
-    # rounds below that bound is acceptable.
-    assert dedup._LAST_CC_ROUNDS < 8, dedup._LAST_CC_ROUNDS
-    with _pytest.raises(ValueError, match="jumps must be >= 1"):
-        dedup.connected_components(edges, "id_a", "id_b", jumps=0)
 
 
 def test_connected_components_raises_when_unconverged(spark):

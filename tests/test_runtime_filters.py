@@ -94,19 +94,64 @@ def test_probe_is_pure_expression(spark):
     assert "getbit" in plan or "Filter" in plan
 
 
-def test_probe_plan_builds_fast(spark):
+def test_probe_plan_carries_one_parsed_word_table(spark, monkeypatch):
     """The word table must enter the plan as ONE parsed SQL literal.
     F.lit(python_list) crosses py4j per element: at 2^20 bits (16384
-    words) that is ~8-10 s of pure driver time; the parsed form is
-    well under a second. Generous 3 s bound — far above parser noise,
-    far below the per-element path."""
-    import time
-    bf = rf.BloomFilter(tuple(range(16384)), 5)
+    words) that is ~8-10 s of pure driver time; the parsed form is one
+    string. Checked by structure, not by wall clock: bloom_probe never
+    hands F.lit a sequence, building the probe sends as many py4j
+    commands for 16384 words as for one, and every word lookup in the
+    analyzed plan reads the same array of all 16384 words, in order,
+    each a literal (the extremes of the int64 range included)."""
+    import re
+
+    real_lit = F.lit
+
+    def guarded_lit(value):
+        assert not isinstance(value, (list, tuple)), value
+        return real_lit(value)
+
+    monkeypatch.setattr(F, "lit", guarded_lit)
+    client = spark.sparkContext._gateway._gateway_client
+    real_send = client.send_command
+    sent = []
+
+    def counted_send(command, *args, **kwargs):
+        # "m" commands release Python-side proxies when the garbage
+        # collector runs — timing, not plan construction
+        if not command.startswith("m\n"):
+            sent.append(command)
+        return real_send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counted_send)
+    words = tuple((i * 0x9E3779B97F4A7C15) % 2 ** 64 - 2 ** 63
+                  for i in range(16384))
+    words = (-2 ** 63, 2 ** 63 - 1) + words[2:]
     df = spark.range(10).select(F.col("id").alias("k"))
-    t0 = time.perf_counter()
-    out = df.filter(rf.bloom_probe("k", bf))
-    out.explain(mode="simple")  # force analysis, not just construction
-    assert time.perf_counter() - t0 < 3.0
+    commands = []
+    for bf in (rf.BloomFilter(words[:1], 5), rf.BloomFilter(words, 5)):
+        sent.clear()
+        out = df.filter(rf.bloom_probe("k", bf))
+        commands.append(len(sent))
+    assert commands[0] == commands[1] > 0, commands
+
+    def arrays(expr, found):
+        if expr.getClass().getSimpleName() == "CreateArray":
+            found.append(expr.sql())
+            return found
+        it = expr.children().iterator()
+        while it.hasNext():
+            arrays(it.next(), found)
+        return found
+
+    tables = arrays(out._jdf.queryExecution().analyzed().condition(), [])
+    assert len(tables) == 5  # one lookup per hash ...
+    assert len(set(tables)) == 1  # ... all into the same table
+    body = tables[0]
+    assert body.startswith("array(") and body.endswith(")")
+    elems = body[len("array("):-1].split(", ")
+    assert all(re.fullmatch(r"-?\d+L", e) for e in elems)
+    assert tuple(int(e[:-1]) for e in elems) == words
 
 
 def test_suggest_bloom_bits():

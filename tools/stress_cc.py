@@ -25,6 +25,12 @@ from pyspark.sql import functions as F
 sys.path.insert(0, ".")
 
 from unilever_scraping_etl_spark.operators import dedup  # noqa: E402
+from unilever_scraping_etl_spark.operators._contracts import (  # noqa: E402
+    env_int,
+)
+from unilever_scraping_etl_spark.operators._fixpoint import (  # noqa: E402
+    LoopStats,
+)
 from unilever_scraping_etl_spark.session import get_session  # noqa: E402
 
 
@@ -53,38 +59,42 @@ def main() -> None:
     print(f"graph: {edges.count()} edges, target {n} nodes")
 
     sums = {}
+    st = LoopStats()
     if "pointer" in ops:
         t = time.perf_counter()
-        cc = dedup.connected_components(edges, "src", "dst")
+        cc = dedup.connected_components(edges, "src", "dst", stats=st)
         sums["pointer"] = checksum(cc)
         print(f"pointer_jump          : {time.perf_counter() - t:.1f} s, "
-              f"rounds={dedup._LAST_CC_ROUNDS}, "
+              f"rounds={st.rounds}, "
               f"(sum,n,comps)={sums['pointer']}", flush=True)
     if "star" in ops:
         t = time.perf_counter()
         cc = dedup.connected_components(edges, "src", "dst",
-                                        algorithm="star")
+                                        algorithm="star", stats=st)
         sums["star"] = checksum(cc)
         print(f"star                  : {time.perf_counter() - t:.1f} s, "
-              f"rounds={dedup._LAST_CC_ROUNDS}, "
+              f"rounds={st.rounds}, "
               f"(sum,n,comps)={sums['star']}", flush=True)
     if len(sums) == 2 and len(set(sums.values())) != 1:
         raise SystemExit(f"LABEL MISMATCH: {sums}")
 
     if "local" in ops:
-        bound = dedup._cc_local_edges()
+        bound = env_int("SPARK_GRAFT_CC_LOCAL_EDGES",
+                        dedup._CC_LOCAL_EDGES_DEFAULT, 0)
         sub = edges.limit(bound).localCheckpoint()
         print(f"subgraph at fast-path bound: {sub.count()} edges")
         t = time.perf_counter()
-        loc = checksum(dedup.connected_components(sub, "src", "dst"))
+        loc = checksum(dedup.connected_components(sub, "src", "dst",
+                                                  stats=st))
         tl = time.perf_counter() - t
-        assert dedup._LAST_CC_ROUNDS == 0
+        assert st.rounds == 0
         t = time.perf_counter()
         dist = checksum(dedup.connected_components(sub, "src", "dst",
-                                                   local_edges=0))
+                                                   local_edges=0,
+                                                   stats=st))
         td = time.perf_counter() - t
         print(f"local union-find      : {tl:.1f} s vs distributed "
-              f"{td:.1f} s (rounds={dedup._LAST_CC_ROUNDS}); "
+              f"{td:.1f} s (rounds={st.rounds}); "
               f"checksums {'EQUAL' if loc == dist else 'MISMATCH'} {loc}",
               flush=True)
         if loc != dist:

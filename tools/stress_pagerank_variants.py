@@ -23,6 +23,9 @@ from pyspark.sql import functions as F
 sys.path.insert(0, ".")
 
 from unilever_scraping_etl_spark.operators import graph  # noqa: E402
+from unilever_scraping_etl_spark.operators._fixpoint import (  # noqa: E402
+    LoopStats,
+)
 from unilever_scraping_etl_spark.session import get_session  # noqa: E402
 
 
@@ -50,18 +53,16 @@ def main() -> None:
 
     def run(label, **kw):
         t = time.perf_counter()
+        st = LoopStats()
         if fixed_k is not None:
             out = graph.pagerank(edges, "src", "dst",
-                                 iterations=fixed_k, **kw)
-            it = fixed_k
+                                 iterations=fixed_k, stats=st, **kw)
         else:
             out = graph.pagerank(edges, "src", "dst", iterations=200,
-                                 tol=1e-8, **kw)
-            it = graph._LAST_PR_ITERATIONS
+                                 tol=1e-8, stats=st, **kw)
         nodes = out.count()
         wall = time.perf_counter() - t
-        if fixed_k is None:
-            it = graph._LAST_PR_ITERATIONS
+        it = st.rounds
         print(f"{label}: {it} iters, {wall:.1f} s "
               f"({wall / it:.2f} s/iter), {nodes} nodes", flush=True)
         return out

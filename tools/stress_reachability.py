@@ -14,7 +14,7 @@ condensation depth that makes peeling-style SCC loops unbounded).
 
 Measured per direction from the deterministic max-total-degree pivot
 (host_bowtie's pivot rule): wall, reached-set size, rounds to the
-verified fixed point (graph._LAST_REACH_ROUNDS), plus the Broder
+verified fixed point (the call's LoopStats), plus the Broder
 class counts from intersecting the two closures.
 
 Usage: python tools/stress_reachability.py [nodes] [edges]
@@ -36,6 +36,9 @@ from pyspark.sql import functions as F
 sys.path.insert(0, ".")
 
 from unilever_scraping_etl_spark.operators import graph  # noqa: E402
+from unilever_scraping_etl_spark.operators._fixpoint import (  # noqa: E402
+    LoopStats,
+)
 from unilever_scraping_etl_spark.session import get_session  # noqa: E402
 
 
@@ -64,16 +67,17 @@ def main() -> None:
     reaches = {}
     for direction in ("forward", "backward"):
         t = time.perf_counter()
+        st = LoopStats()
         r = graph.reachability(edges, "src", "dst", pivot,
                                direction=direction, rounds=64,
                                until_stable=True,
                                broadcast_frontier=bcast,
-                               on_cap="warn")
+                               on_cap="warn", stats=st)
         cnt = r.count()
         print(f"reachability {direction:<8}: "
               f"{time.perf_counter() - t:.1f} s, {cnt} nodes, "
-              f"{graph._LAST_REACH_ROUNDS} rounds "
-              f"(converged={graph._LAST_REACH_CONVERGED})", flush=True)
+              f"{st.rounds} rounds (converged={st.converged})",
+              flush=True)
         reaches[direction] = r.localCheckpoint()
 
     t = time.perf_counter()

@@ -38,3 +38,23 @@ def require_free_columns(op_name: str, columns: Iterable[str],
             f"{op_name}: column name(s) {taken} are reserved by the "
             f"operator ({kind} columns) — rename them in the input "
             "before calling")
+
+
+def env_int(name: str, default: int, lo: int) -> int:
+    """The integer deployment knob ``name`` (a ``SPARK_GRAFT_*``
+    environment variable): ``default`` when unset or empty, otherwise
+    its value, which must parse as an integer >= ``lo``. Anything else
+    raises ``ValueError`` naming the variable — a knob that falls back
+    or clamps silently can turn a typo into a wrong answer."""
+    import os
+
+    raw = os.environ.get(name, "").strip()
+    if not raw:
+        return default
+    try:
+        value = int(raw)
+    except ValueError:
+        raise ValueError(f"{name}={raw!r} is not an integer") from None
+    if value < lo:
+        raise ValueError(f"{name}={value} is below its minimum {lo}")
+    return value

@@ -48,18 +48,19 @@ from pyspark.sql import functions as F
 from unilever_scraping_etl_spark.operators._contracts import (
     require_free_columns,
 )
+from unilever_scraping_etl_spark.operators._fixpoint import (
+    LoopStats,
+    record,
+)
 
 _WORKING = ("__u", "__v", "__dist", "__reg", "__val", "__est", "__t")
-
-# diagnostic: rounds the last exact call actually expanded (early exit
-# on an empty frontier) — same pattern as graph._LAST_PR_ITERATIONS
-_LAST_HC_ROUNDS = 0
 
 
 def harmonic_centrality(edges: DataFrame, src: str, dst: str,
                         radius: int = 3,
                         materialize: bool = True,
-                        targets: DataFrame | None = None) -> DataFrame:
+                        targets: DataFrame | None = None,
+                        stats: LoopStats | None = None) -> DataFrame:
     """Exact truncated harmonic centrality. Returns ``(node,
     harmonic)`` for every node in the graph (0.0 for nodes nothing
     reaches within ``radius``); ``harmonic`` is rounded to 9 digits
@@ -81,11 +82,16 @@ def harmonic_centrality(edges: DataFrame, src: str, dst: str,
     O(all reachable pairs). This is the sketch-validation tool at
     page scale: exact ground truth for a node sample on a graph
     where the full pair expansion is infeasible. Output rows = the
-    (distinct) targets, 0.0 when unreached."""
+    (distinct) targets, 0.0 when unreached.
+
+    ``stats`` (a :class:`LoopStats`) receives the BFS rounds that
+    reached new pairs and whether the frontier ran dry before the
+    radius (``None`` when no probe ran: ``materialize=False`` or
+    ``radius=1``)."""
     require_free_columns("harmonic_centrality", edges.columns,
                          ("node", "harmonic"), kind="output")
     nodes, seen = _reach_pairs("harmonic_centrality", edges, src, dst,
-                               radius, materialize, targets)
+                               radius, materialize, targets, stats)
     h = (seen.filter(F.col("__u") != F.col("__v"))
          .groupBy(F.col("__v").alias("node"))
          .agg(F.sum(F.lit(1.0) / F.col("__dist")).alias("harmonic")))
@@ -98,7 +104,8 @@ def harmonic_centrality(edges: DataFrame, src: str, dst: str,
 def centrality_profile(edges: DataFrame, src: str, dst: str,
                        radius: int = 3,
                        materialize: bool = True,
-                       targets: DataFrame | None = None) -> DataFrame:
+                       targets: DataFrame | None = None,
+                       stats: LoopStats | None = None) -> DataFrame:
     """Harmonic, closeness, and Lin centrality from ONE truncated BFS
     pair expansion — the full authority profile web rankings publish,
     at the cost of the single metric (the expensive part is the pair
@@ -118,12 +125,13 @@ def centrality_profile(edges: DataFrame, src: str, dst: str,
     engines agree). Floats round-9 (cross-engine sum order);
     closeness/lin divide exact integers so the round is belt-and-
     braces. ``targets`` restricts to a node sample via the backward
-    expansion, as in :func:`harmonic_centrality`."""
+    expansion and ``stats`` reports the BFS, as in
+    :func:`harmonic_centrality`."""
     require_free_columns("centrality_profile", edges.columns,
                          ("node", "harmonic", "n_reached", "closeness",
                           "lin"), kind="output")
     nodes, seen = _reach_pairs("centrality_profile", edges, src, dst,
-                               radius, materialize, targets)
+                               radius, materialize, targets, stats)
     agg = (seen.filter(F.col("__u") != F.col("__v"))
            .groupBy(F.col("__v").alias("node"))
            .agg(F.sum(F.lit(1.0) / F.col("__dist")).alias("__h"),
@@ -146,8 +154,8 @@ def centrality_profile(edges: DataFrame, src: str, dst: str,
 
 def _reach_pairs(op: str, edges: DataFrame, src: str, dst: str,
                  radius: int, materialize: bool,
-                 targets: DataFrame | None) -> tuple[DataFrame,
-                                                     DataFrame]:
+                 targets: DataFrame | None,
+                 stats: LoopStats | None) -> tuple[DataFrame, DataFrame]:
     """Shared truncated-BFS pair expansion: returns ``(nodes, seen)``
     where ``seen`` holds every reachable pair ``(__u, __v, __dist)``
     with ``__dist`` the true shortest distance ≤ radius (first
@@ -155,12 +163,13 @@ def _reach_pairs(op: str, edges: DataFrame, src: str, dst: str,
     graph nodes, or the distinct targets). One shuffle per BFS round;
     early exit on an exhausted frontier via a bounded 1-boolean probe
     (materialize=True only). With ``targets`` the expansion runs
-    BACKWARD from the targets' in-edges so ``__v`` stays pinned."""
+    BACKWARD from the targets' in-edges so ``__v`` stays pinned.
+    Keeps its own loop — the frontier and the seen set are two states,
+    and the probe decides whether a round's pairs count at all — and
+    reports through ``stats``."""
     if radius < 1:
         raise ValueError("radius must be >= 1")
     require_free_columns(op, edges.columns, _WORKING)
-    global _LAST_HC_ROUNDS
-    _LAST_HC_ROUNDS = 0
     edges = edges.filter(F.col(src).isNotNull()
                          & F.col(dst).isNotNull())
     if materialize:
@@ -188,7 +197,7 @@ def _reach_pairs(op: str, edges: DataFrame, src: str, dst: str,
         nodes = nodes.localCheckpoint()
     seen = pairs.withColumn("__dist", F.lit(1))
     frontier = pairs
-    _LAST_HC_ROUNDS = 1
+    rounds, converged = 1, None
     for t in range(2, radius + 1):
         if targets is None:
             nxt = (frontier.join(edges, frontier["__v"] == edges[src])
@@ -205,11 +214,14 @@ def _reach_pairs(op: str, edges: DataFrame, src: str, dst: str,
             # in its own job — no separate synchronous checkpoint job
             # per BFS round
             nxt = nxt.localCheckpoint(eager=False)
-            if nxt.isEmpty():  # bounded probe: one boolean per round
+            # bounded probe: one boolean per round
+            converged = nxt.isEmpty()
+            if converged:
                 break
-        _LAST_HC_ROUNDS = t
+        rounds = t
         seen = seen.union(nxt.withColumn("__dist", F.lit(t)))
         frontier = nxt
+    record(stats, rounds, converged)
     return nodes, seen
 
 

@@ -40,7 +40,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectors
-from ._contracts import require_free_columns
+from ._contracts import env_int, require_free_columns
 
 _DSIR_RESERVED = ("__t", "__tgt", "__term", "__b", "__ct", "__cr", "__lr")
 
@@ -424,7 +424,7 @@ B x K blocks so one hot cluster costs O(B*K) fp64 per step (~512 MB at
 K=8M rows), never an O(K^2) allocation — an executor OOM becomes a
 slow-but-bounded task. 8192 x 8192 fp64 is ~512 MB, the same envelope
 as the grid-GEMM dedup kernels; override via
-``SPARK_GRAFT_SEMDEDUP_BLOCK`` for tighter workers."""
+``SPARK_GRAFT_SEMDEDUP_BLOCK`` (an integer >= 1) for tighter workers."""
 
 
 def _round_half_up(x, digits: int):
@@ -478,16 +478,13 @@ def _semdedup_prune_gemm(av: DataFrame, id_col: str, threshold: float,
     remedy (raise n_seeds so clusters bound the quadratic term)
     remains the real fix; the applyInPandas lane still materializes
     the cluster's ROWS in one task by construction."""
-    import os
-
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
     id_field = av.select(id_col).schema[0]
     out_schema = T.StructType([id_field])
-    block = int(os.environ.get("SPARK_GRAFT_SEMDEDUP_BLOCK", 0)) \
-        or _SEMDEDUP_GEMM_BLOCK
+    block = env_int("SPARK_GRAFT_SEMDEDUP_BLOCK", _SEMDEDUP_GEMM_BLOCK, 1)
 
     def prune(pdf: pd.DataFrame) -> pd.DataFrame:
         # NULL vectors null-propagate like the expression kernel: a

@@ -18,6 +18,13 @@ from __future__ import annotations
 import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import DataFrame, functions as F
 
+from unilever_scraping_etl_spark.operators._contracts import env_int
+from unilever_scraping_etl_spark.operators._fixpoint import (
+    LoopStats,
+    fixpoint,
+    record,
+)
+
 
 def _shuffle_partitions(spark) -> int:
     """spark.sql.shuffle.partitions as an int, tolerating non-numeric
@@ -837,30 +844,18 @@ def embedding_near_pairs_gemm(emb: DataFrame, id_col: str, vec_col: str,
     return emb.select(id_col, vec_col).mapInPandas(gen, out_schema)
 
 
-_LAST_CC_ROUNDS: int | None = None
-"""Diagnostic: rounds the last connected_components call used to
-converge (set on success; None before the first call). A measurement
-hook for the rounds-vs-diameter record in BASELINE.md and the
-convergence tests — not part of the operator contract."""
-
-
 _CC_LOCAL_EDGES_DEFAULT = 1_000_000
 """Default edge-count bound for the single-task union-find fast path
 (see connected_components). Overridable per call (``local_edges``) or
-per deployment (``SPARK_GRAFT_CC_LOCAL_EDGES``); 0 disables."""
-
-
-def _cc_local_edges() -> int:
-    import os
-    v = os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES")
-    return int(v) if v else _CC_LOCAL_EDGES_DEFAULT
+per deployment (``SPARK_GRAFT_CC_LOCAL_EDGES``, validated >= 0); 0
+disables."""
 
 
 def connected_components(edges: DataFrame, src: str, dst: str,
                          max_iterations: int = 30,
                          algorithm: str = "pointer_jump",
-                         jumps: int = 1,
-                         local_edges: int | None = None) -> DataFrame:
+                         local_edges: int | None = None,
+                         stats: LoopStats | None = None) -> DataFrame:
     """Connected components over an undirected edge list by iterative
     min-label propagation: every node starts labeled with
     min(own id, min neighbor id) — a free one-hop head start, since
@@ -912,19 +907,14 @@ def connected_components(edges: DataFrame, src: str, dst: str,
     instead of d (Kiveris et al., "Connected Components in MapReduce
     and Beyond", SoCC 2014 — same round bound as large-star/small-star
     with a simpler per-round shape; r4 verdict flagged diameter-bound
-    rounds as the 100 TB risk). ``jumps`` applies the shortcut that
-    many times per round — on LABEL-CHAIN-bound graphs (long paths
-    with monotone ids) paths shrink 2^jumps x per round, so rounds
-    fall to ~log_{2^jumps}(d): measured 8 -> 5 -> 4 rounds on the
-    256-chain for jumps 1/2/3. The default stays 1 because real dedup
-    pair graphs are HOP-bound, not chain-bound (r16 OPTIMIZATION,
-    measured + simulated on the sf0.1 embedding pair graph: 10 rounds
-    regardless of jumps — labels point at nearby LOCAL minima whose
+    rounds as the 100 TB risk). One jump per round: real dedup pair
+    graphs are HOP-bound, not chain-bound (r16 OPTIMIZATION, measured
+    + simulated on the sf0.1 embedding pair graph: 10 rounds with 1,
+    2 or 3 jumps per round — labels point at nearby LOCAL minima whose
     own labels are self-referential until the true minimum arrives
     hop by hop, so extra jumps buy nothing and each costs a
     |nodes|-row self-join per round). For a long-diameter graph,
-    prefer ``algorithm="star"`` first; raise ``jumps`` only when
-    measurement shows label chains are the binding constraint. The jump preserves correctness: a
+    prefer ``algorithm="star"``. The jump preserves correctness: a
     node's label is always the id of a node in the SAME component
     (edges never cross components, initial labels are own ids), so
     label(label(n)) is too, and min-labels only decrease. A converged
@@ -935,13 +925,14 @@ def connected_components(edges: DataFrame, src: str, dst: str,
     only ever decrease, so an unchanged exact sum over a constant node
     set ⇔ no label changed. The sum runs in DECIMAL(38,0) so it cannot
     overflow at any node-count x id-magnitude.
+
+    ``stats`` (a :class:`LoopStats`) receives the rounds the loop
+    used (0 on the single-task fast path) and ``converged=True``;
+    non-convergence raises, after the stats record the cap hit.
     """
-    global _LAST_CC_ROUNDS
     if algorithm not in ("pointer_jump", "star"):
         raise ValueError(f"unknown algorithm {algorithm!r}: expected "
                          f"'pointer_jump' or 'star'")
-    if jumps < 1:
-        raise ValueError("jumps must be >= 1")
     # Materialize the DIRECTED edge list BEFORE symmetrizing: without
     # it, the union's two branches both reference the upstream pair
     # pipeline (minhash + verify, or the GEMM grid) — the most
@@ -974,12 +965,14 @@ def connected_components(edges: DataFrame, src: str, dst: str,
     # one Python worker — far under one distributed round's barrier
     # cost at that scale. ``local_edges=0`` (or the env override)
     # disables; tests that pin distributed round counts use that.
-    limit = _cc_local_edges() if local_edges is None else local_edges
+    limit = (env_int("SPARK_GRAFT_CC_LOCAL_EDGES",
+                     _CC_LOCAL_EDGES_DEFAULT, 0)
+             if local_edges is None else local_edges)
     if limit and directed.count() <= limit:
-        _LAST_CC_ROUNDS = 0
+        record(stats, 0, True)
         return _local_components(directed)
     if algorithm == "star":
-        return _star_components(directed, max_iterations)
+        return _star_components(directed, max_iterations, stats)
     sym = directed.union(directed.select(F.col("b").alias("a"),
                                          F.col("a").alias("b"))).distinct()
     sym = sym.localCheckpoint()  # reused every round — cut the upstream plan
@@ -995,8 +988,8 @@ def connected_components(edges: DataFrame, src: str, dst: str,
               .agg(F.min("b").alias("min_nb"))
               .select(F.col("a").alias("node"),
                       F.least("a", "min_nb").alias("component")))
-    prev_sum, converged = None, False
-    for round_i in range(max_iterations):
+
+    def _hop_and_jump(labels: DataFrame) -> DataFrame:
         msgs = (sym.join(labels, sym["b"] == labels["node"])
                 .select(sym["a"].alias("node"), "component"))
         hopped = (labels.unionByName(msgs)
@@ -1007,51 +1000,33 @@ def connected_components(edges: DataFrame, src: str, dst: str,
         # from the same closed node set), so the left join misses only
         # when component == node already (self-label) — coalesce keeps
         # it. least() guards the (impossible by monotonicity, cheap to
-        # pin) case of a jump ever increasing a label. Applied ``jumps``
-        # times per round (r16 optimization): each application composes
-        # the label table with itself, so label paths shrink by
-        # 2^jumps per round and convergence takes ~log_{2^jumps}(d)
-        # EDGE-JOIN rounds instead of log2(d) — each extra jump is one
-        # |nodes|-row self-join, far cheaper than the |edges|-row hop
-        # shuffle (and, locally, than a full round's job barrage) it
-        # replaces. Correctness is round-count-independent: every jump
-        # preserves "label = id of a node in the same component" and
-        # labels only decrease, so the fixed point (and the sum-based
-        # convergence test below) is the same for any jumps >= 1.
-        new_labels = hopped
-        for _ in range(jumps):
-            jmp = new_labels.select(F.col("node").alias("jnode"),
-                                    F.col("component").alias("jcomp"))
-            new_labels = (new_labels.join(
-                              jmp,
-                              new_labels["component"] == jmp["jnode"],
-                              "left")
-                          .select(new_labels["node"],
-                                  F.least(
-                                      new_labels["component"],
-                                      F.coalesce(jmp["jcomp"],
-                                                 new_labels["component"]))
-                                   .alias("component")))
-        new_labels = new_labels.localCheckpoint(eager=False)
-        cur = tuple(new_labels.agg(
+        # pin) case of a jump ever increasing a label.
+        jmp = hopped.select(F.col("node").alias("jnode"),
+                            F.col("component").alias("jcomp"))
+        return (hopped.join(jmp, hopped["component"] == jmp["jnode"],
+                            "left")
+                .select(hopped["node"],
+                        F.least(hopped["component"],
+                                F.coalesce(jmp["jcomp"],
+                                           hopped["component"]))
+                        .alias("component")))
+
+    # Unconverged labels are WRONG (a long-diameter chain merges
+    # components only one hop per round); silent truncation would
+    # yield incorrect duplicate clusters at scale with no signal — so
+    # the cap raises. No baseline probe: the first round never
+    # matches.
+    return fixpoint(
+        labels, _hop_and_jump, max_iterations,
+        probe=lambda new, _: tuple(new.agg(
             F.sum(F.col("component").cast("decimal(38,0)")),
-            F.count(F.lit(1))).collect()[0])
-        labels = new_labels
-        if cur == prev_sum:
-            converged = True
-            break
-        prev_sum = cur
-    if not converged:
-        # Unconverged labels are WRONG (a long-diameter chain merges
-        # components only one hop per round); silent truncation would
-        # yield incorrect duplicate clusters at scale with no signal.
-        raise RuntimeError(
-            f"connected_components did not converge within "
-            f"{max_iterations} iterations; raise max_iterations or "
-            f"rerun with algorithm='star' (large-star/small-star) for "
-            f"long-diameter graphs")
-    _LAST_CC_ROUNDS = round_i + 1
-    return labels
+            F.count(F.lit(1))).collect()[0]),
+        on_cap="raise",
+        cap_message=(f"connected_components did not converge within "
+                     f"{max_iterations} iterations; raise max_iterations "
+                     f"or rerun with algorithm='star' (large-star/"
+                     f"small-star) for long-diameter graphs"),
+        stats=stats)
 
 
 def _local_components(directed: DataFrame) -> DataFrame:
@@ -1106,7 +1081,8 @@ def _local_components(directed: DataFrame) -> DataFrame:
     return directed.coalesce(1).mapInPandas(uf, "node long, component long")
 
 
-def _star_components(directed: DataFrame, max_iterations: int) -> DataFrame:
+def _star_components(directed: DataFrame, max_iterations: int,
+                     stats: LoopStats | None) -> DataFrame:
     """Alternating large-star/small-star contraction (Kiveris et al.,
     SoCC 2014) over a checkpointed directed edge list with long-typed
     columns (a, b). See connected_components(algorithm="star").
@@ -1160,10 +1136,7 @@ def _star_components(directed: DataFrame, max_iterations: int) -> DataFrame:
         own = withm.select("a", F.col("m").alias("b"))
         return reparent.union(own).distinct()
 
-    edges = directed.filter(F.col("a") != F.col("b"))
-    converged = False
-    for round_i in range(max_iterations):
-        edges = small_star(large_star(edges)).localCheckpoint()
+    def _is_star(edges: DataFrame, _) -> bool:
         # Exact star test: converged iff no parent is also a child AND
         # every child has exactly one distinct parent (see docstring —
         # the first conjunct alone stops early on two-lobe graphs where
@@ -1171,19 +1144,23 @@ def _star_components(directed: DataFrame, max_iterations: int) -> DataFrame:
         parent_is_child = (edges.select("b").join(
             edges.select(F.col("a").alias("b")), "b", "left_semi")
             .limit(1).count())
-        if parent_is_child == 0:
-            multi_parent = (edges.groupBy("a")
-                            .agg(F.count_distinct("b").alias("np"))
-                            .filter(F.col("np") > 1).limit(1).count())
-            if multi_parent == 0:
-                converged = True
-                break
-    if not converged:
-        raise RuntimeError(
-            f"connected_components(algorithm='star') did not converge "
-            f"within {max_iterations} iterations; raise max_iterations")
-    global _LAST_CC_ROUNDS
-    _LAST_CC_ROUNDS = round_i + 1
+        if parent_is_child:
+            return False
+        return (edges.groupBy("a")
+                .agg(F.count_distinct("b").alias("np"))
+                .filter(F.col("np") > 1).limit(1).count()) == 0
+
+    # the round's EAGER checkpoint (not fixpoint's lazy one) cuts
+    # the growing lineage before the two probe aggregates read it
+    edges = fixpoint(
+        directed.filter(F.col("a") != F.col("b")),
+        lambda e: small_star(large_star(e)).localCheckpoint(),
+        max_iterations, probe=_is_star, stable=lambda _, ok: ok,
+        checkpoint=False, on_cap="raise",
+        cap_message=(f"connected_components(algorithm='star') did not "
+                     f"converge within {max_iterations} iterations; "
+                     f"raise max_iterations"),
+        stats=stats)
     # Reattach every node from the ORIGINAL edge list: star centers
     # appear only as parents, and self-loop-only nodes carry no edge
     # through the contraction at all — both self-label.

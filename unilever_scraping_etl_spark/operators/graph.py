@@ -56,59 +56,49 @@ CC convergence checksum).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from unilever_scraping_etl_spark.operators._contracts import (
     require_free_columns,
 )
+from unilever_scraping_etl_spark.operators._fixpoint import (
+    LoopStats,
+    fixpoint,
+    record,
+)
 
 _WORKING = ("__outdeg", "__contrib", "__rank", "__dmass", "__prev",
             "__wr", "__wtot", "__sv", "__cn", "__esv")
 
-# diagnostic: iterations the last pagerank() call actually ran (the
-# tol early-stop is otherwise invisible) — same pattern as connected
-# components' _LAST_CC_ROUNDS
-_LAST_PR_ITERATIONS = 0
-
-# Diagnostics for the until_stable peeling family (r14 VERDICT #2):
-# rounds the last k_core() / core_number() call actually executed,
-# and whether it VERIFIED the fixed point (the stability probe fired)
-# or hit the rounds cap with the last round still changing. A cap-hit
-# result is a monotone upper bound (superset survivors / inflated
-# coreness) — correct direction, unverified value — which callers
-# previously could not distinguish from convergence. Set on every
-# call (fixed-rounds runs record rounds executed, converged=None
-# since no probe runs); not part of the operator contract. Like
-# _LAST_PR_ITERATIONS and dedup's _LAST_CC_ROUNDS these are plain
-# module globals with no thread affinity — concurrent driver threads
-# overwrite each other's verdicts; a caller that needs a race-free
-# signal uses on_cap="raise"/"warn" (delivered on the calling
-# thread), not the globals.
-_LAST_KCORE_ROUNDS: int | None = None
-_LAST_KCORE_CONVERGED: bool | None = None
-_LAST_CORE_ROUNDS: int | None = None
-_LAST_CORE_CONVERGED: bool | None = None
+_PEEL_BOUND = ("a monotone upper bound (superset survivors / inflated "
+               "coreness)")
 
 
-def _on_cap_signal(name: str, rounds: int, on_cap: str,
-                   bound: str = "a monotone upper bound (superset "
-                                "survivors / inflated coreness)") -> None:
-    """Shared cap-hit escalation for the until_stable family:
-    ``"silent"`` preserves the historical behavior (the result is a
-    documented monotone bound), ``"warn"`` emits a RuntimeWarning,
-    ``"raise"`` matches connected_components' loud non-convergence
-    discipline (dedup.py) for callers that treat an unverified bound
-    as wrong. ``bound`` names the direction — peeling truncates HIGH
+def _check_until_stable(until_stable: bool, materialize: bool,
+                        on_cap: str) -> None:
+    """Shared argument checks for the until_stable family."""
+    if until_stable and not materialize:
+        raise ValueError("until_stable requires materialize=True "
+                         "(each stability probe evaluates the plan)")
+    if on_cap not in ("silent", "warn", "raise"):
+        raise ValueError("on_cap must be 'silent', 'warn', or 'raise'")
+    if on_cap != "silent" and not until_stable:
+        raise ValueError("on_cap escalation requires until_stable=True "
+                         "(fixed-rounds runs never probe the fixpoint, "
+                         "so a cap-hit signal could not fire)")
+
+
+def _cap_message(name: str, rounds: int, bound: str = _PEEL_BOUND) -> str:
+    """The until_stable family's cap-hit text for ``on_cap="warn"`` /
+    ``"raise"``. ``bound`` names the direction — peeling truncates HIGH
     (supersets), reachability truncates LOW (a ≤rounds-hop subset)."""
-    msg = (f"{name}(until_stable=True) hit the rounds cap "
-           f"({rounds}) before verifying the fixed point; the "
-           f"result is {bound}. Raise `rounds` or accept the bound.")
-    if on_cap == "raise":
-        raise RuntimeError(msg)
-    if on_cap == "warn":
-        import warnings
-        warnings.warn(msg, RuntimeWarning, stacklevel=3)
+    return (f"{name}(until_stable=True) hit the rounds cap "
+            f"({rounds}) before verifying the fixed point; the "
+            f"result is {bound}. Raise `rounds` or accept the bound.")
+
 
 # The bounded-probe broadcast discipline (pagerank, round 11), shared
 # by the whole structural family since round 14: every iterative
@@ -164,7 +154,8 @@ def pagerank(edges: DataFrame, src: str, dst: str,
              broadcast_ranks: bool | None = None,
              warm_start: DataFrame | None = None,
              weight_col: str | None = None,
-             personalize: DataFrame | None = None) -> DataFrame:
+             personalize: DataFrame | None = None,
+             stats: LoopStats | None = None) -> DataFrame:
     """Fixed-iteration PageRank over the directed edge list
     ``edges[src, dst]`` (parallel duplicate edges count once per
     occurrence — pre-DISTINCT the list if that is not intended).
@@ -225,7 +216,11 @@ def pagerank(edges: DataFrame, src: str, dst: str,
     also re-enters per ``s`` (the textbook personalized correction),
     so total mass stays exactly 1. A seed uniform over all nodes
     reduces exactly to standard PageRank (property-tested). Composes
-    with ``warm_start``/``tol``/``weight_col``."""
+    with ``warm_start``/``tol``/``weight_col``.
+    ``stats``: a :class:`LoopStats` filled with the iterations run —
+    the ``tol`` early stop is otherwise invisible — and whether the
+    ``tol`` probe fired (``None`` without ``tol``). Output only: it
+    changes no plan and no job."""
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
     if not 0.0 < damping < 1.0:
@@ -238,8 +233,7 @@ def pagerank(edges: DataFrame, src: str, dst: str,
     require_free_columns("pagerank", edges.columns, _WORKING)
     require_free_columns("pagerank", edges.columns, ("node", "rank"),
                          kind="output")
-    global _LAST_PR_ITERATIONS
-    _LAST_PR_ITERATIONS = 0
+    record(stats, 0, None)
     edges = edges.filter(F.col(src).isNotNull()
                          & F.col(dst).isNotNull())
     if weight_col is not None:
@@ -386,12 +380,16 @@ def pagerank(edges: DataFrame, src: str, dst: str,
         edges = edges.join(esv, src)
         if materialize:
             edges = edges.localCheckpoint()
-    prev: tuple[DataFrame, DataFrame | None] | None = None
-    for i in range(iterations):
-        _LAST_PR_ITERATIONS = i + 1
+
+    def _iterate(ranks: DataFrame,
+                 prev: tuple[DataFrame, DataFrame | None] | None = None
+                 ) -> tuple[DataFrame, DataFrame | None]:
+        """One iteration's sparse (contribs, dangling mass): from the
+        dense ``ranks`` frame, or from the previous iteration's sparse
+        pair via the closed form."""
         if prev is None:
-            # first iteration: the explicit init frame (uniform or
-            # warm-start seed) is the rank source
+            # the dense frame (init seed, or the tol path's ranks) is
+            # the rank source
             rside = F.broadcast(ranks) if broadcast_ranks else ranks
             joined = edges.join(rside, edges[src] == rside["node"])
             rank_u = F.col("rank")
@@ -422,39 +420,34 @@ def pagerank(edges: DataFrame, src: str, dst: str,
                     .agg(F.sum("__contrib").alias("__contrib")))
         dmass = None
         if redistribute_dangling:
-            if prev is None:
-                dsrc = ranks
-            else:
-                # dangling ranks via the same closed form (dangling
-                # derives from `nodes`, so it carries __sv when
-                # personalized)
-                dsrc = _dense(*prev)
+            # dangling ranks via the same closed form (dangling
+            # derives from `nodes`, so it carries __sv when
+            # personalized)
+            dsrc = ranks if prev is None else _dense(*prev)
             dmass = (dsrc.join(dangling, "node", "left_semi")
                      .agg(F.coalesce(F.sum("rank"), F.lit(0.0))
                           .alias("__dmass")))
-        if tol is not None:
-            new = _dense(contribs, dmass)
-            # probe needs the frame evaluated anyway; checkpointing it
-            # also keeps each probe from re-running the iteration
-            # chain. LAZY (r16): the delta probe right below
-            # materializes it in its own job — no separate
-            # synchronous checkpoint job per probed iteration
-            new = new.localCheckpoint(eager=False)
-            delta = (new.join(ranks.withColumnRenamed("rank", "__prev"),
-                              "node")
-                     .agg(F.max(F.abs(F.col("rank") - F.col("__prev"))))
-                     .first()[0])
-            ranks = new
-            prev = None  # tol path stays dense: next join uses `ranks`
-            if delta is not None and delta <= tol:
-                break
-        else:
-            prev = (contribs, dmass)
+        return contribs, dmass
+
+    if tol is not None:
+        def _max_delta(new: DataFrame, old: DataFrame):
+            return (new.join(old.withColumnRenamed("rank", "__prev"),
+                             "node")
+                    .agg(F.max(F.abs(F.col("rank") - F.col("__prev"))))
+                    .first()[0])
+        ranks = fixpoint(ranks, lambda r: _dense(*_iterate(r)),
+                         iterations, probe=_max_delta,
+                         stable=lambda _, d: d is not None and d <= tol,
+                         stats=stats)
+    else:
+        prev = None
+        for i in range(iterations):
+            contribs, dmass = _iterate(ranks, prev)
             if checkpoint_every and (i + 1) % checkpoint_every == 0:
                 contribs = contribs.localCheckpoint()
-                prev = (contribs, dmass)
-    if tol is None:
+            prev = (contribs, dmass)
         ranks = _dense(*prev)
+        record(stats, iterations, None)
     if rank_digits is not None:
         ranks = ranks.select("node", F.round("rank", rank_digits)
                              .alias("rank"))
@@ -543,38 +536,45 @@ def hits(edges: DataFrame, src: str, dst: str,
         return nodes.select("node", F.lit(0.0).alias("hub"),
                             F.lit(0.0).alias("authority"))
 
-    # The loop runs on SPARSE score frames — only nodes that received
-    # mass this half-step. Nodes absent from a sparse frame have score
-    # exactly 0.0, and 0.0 is an exact no-op in every place such a row
-    # could flow: a 0-score term adds nothing to the next half-step's
-    # sums (x + 0.0*w == x in IEEE), and contributes nothing to an L2
-    # norm — so the dense per-half-step `nodes` LEFT-join + coalesce
-    # of the previous shape was pure overhead: one extra join and one
-    # extra |V|-row pass PER HALF-STEP (2K joins for K iterations) at
-    # 100 TB, each carried before the norm could be taken. The dense
-    # completion happens ONCE, after the loop. Scores are bit-identical
-    # to the dense form (same join terms, same norm value).
-    def _normalized(raw: DataFrame, col: str) -> DataFrame:
-        norm = raw.agg(
-            F.sqrt(F.sum(F.col(col) * F.col(col))).alias("__z"))
-        return (raw.crossJoin(F.broadcast(norm))
-                .select("node",
-                        (F.col(col) / F.col("__z")).alias(col)))
-
-    hub = nodes.select("node", F.lit(1.0).alias("hub"))
-    auth = None
     # weighted contribution: score × edge weight; unweighted keeps the
     # plain column (no 1.0-multiply noise in the unweighted plan)
-    def _wmul(score: Column) -> Column:
-        if weight_col is None:
-            return score
-        return score * F.col(weight_col).cast("double")
-    for i in range(iterations):
-        hside = F.broadcast(hub) if broadcast_scores else hub
-        araw = (edges.join(hside, edges[src] == hside["node"])
-                .select(F.col(dst).alias("node"),
-                        _wmul(F.col("hub")).alias("hub"))
-                .groupBy("node").agg(F.sum("hub").alias("authority")))
+    w = None if weight_col is None else F.col(weight_col).cast("double")
+    return _mutual_scores(edges, src, dst, nodes, iterations, w, w,
+                          lambda c: F.sqrt(F.sum(c * c)),
+                          broadcast_scores, materialize, hub_digits)
+
+
+def _mutual_scores(en: DataFrame, a: str, b: str, nodes: DataFrame,
+                   iterations: int, wa: Column | None, wh: Column | None,
+                   norm: Callable[[Column], Column],
+                   broadcast_scores: bool, materialize: bool,
+                   digits: int | None) -> DataFrame:
+    """The hits/salsa half-step loop over the edge list ``en[a, b]``:
+    from h₀ ≡ 1, each iteration sums hub scores (times ``wa``) into
+    authorities along a→b and authority scores (times ``wh``) back
+    into hubs along b→a, each half-step divided by its ``norm`` (an
+    aggregate of the score column: L2 for hits, L1 for salsa). A
+    ``None`` weight multiplies by nothing. Returns the dense
+    ``(node, hub, authority)`` frame, rounded to ``digits``.
+
+    The loop runs on SPARSE score frames — only nodes that received
+    mass this half-step. Nodes absent from a sparse frame have score
+    exactly 0.0, and 0.0 is an exact no-op in every place such a row
+    could flow: a 0-score term adds nothing to the next half-step's
+    sums (x + 0.0*w == x in IEEE), and contributes nothing to an L1 or
+    L2 norm — so a dense per-half-step ``nodes`` LEFT-join + coalesce
+    would be pure overhead: one extra join and one extra |V|-row pass
+    PER HALF-STEP (2K joins for K iterations), each carried before
+    the norm could be taken. The dense completion happens ONCE, after
+    the loop. Scores are bit-identical to the dense form (same join
+    terms, same norm value)."""
+    def _half_step(scores: DataFrame, on: str, to: str, col: str,
+                   out: str, weight: Column | None) -> DataFrame:
+        side = F.broadcast(scores) if broadcast_scores else scores
+        term = F.col(col) if weight is None else F.col(col) * weight
+        raw = (en.join(side, en[on] == side["node"])
+               .select(F.col(to).alias("node"), term.alias(col))
+               .groupBy("node").agg(F.sum(col).alias(out)))
         if materialize:
             # snapshot the RAW half-step sums LAZILY: the norm is an
             # aggregate OF this frame and the normalized scores divide
@@ -584,16 +584,16 @@ def hits(edges: DataFrame, src: str, dst: str,
             # executed) twice; eager=False materializes it inside the
             # norm's broadcast job instead of paying a separate
             # synchronous job per half-step
-            araw = araw.localCheckpoint(eager=False)
-        auth = _normalized(araw, "authority")
-        aside = F.broadcast(auth) if broadcast_scores else auth
-        hraw = (edges.join(aside, edges[dst] == aside["node"])
-                .select(F.col(src).alias("node"),
-                        _wmul(F.col("authority")).alias("authority"))
-                .groupBy("node").agg(F.sum("authority").alias("hub")))
-        if materialize:
-            hraw = hraw.localCheckpoint(eager=False)
-        hub = _normalized(hraw, "hub")
+            raw = raw.localCheckpoint(eager=False)
+        z = raw.agg(norm(F.col(out)).alias("__z"))
+        return (raw.crossJoin(F.broadcast(z))
+                .select("node", (F.col(out) / F.col("__z")).alias(out)))
+
+    hub = nodes.select("node", F.lit(1.0).alias("hub"))
+    auth = None
+    for _ in range(iterations):
+        auth = _half_step(hub, a, b, "hub", "authority", wa)
+        hub = _half_step(auth, b, a, "authority", "hub", wh)
     # dense completion ONCE: every graph node appears in the output,
     # nodes that never received mass at exactly 0.0 (the value the
     # per-half-step dense form carried for them all along)
@@ -604,9 +604,9 @@ def hits(edges: DataFrame, src: str, dst: str,
                    F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
                    F.coalesce(F.col("authority"), F.lit(0.0))
                    .alias("authority")))
-    if hub_digits is not None:
-        out = out.select("node", F.round("hub", hub_digits).alias("hub"),
-                         F.round("authority", hub_digits)
+    if digits is not None:
+        out = out.select("node", F.round("hub", digits).alias("hub"),
+                         F.round("authority", digits)
                          .alias("authority"))
     return out.select("node", "hub", "authority")
 
@@ -698,58 +698,9 @@ def salsa(edges: DataFrame, src: str, dst: str,
     if empty:
         return nodes.select("node", F.lit(0.0).alias("hub"),
                             F.lit(0.0).alias("authority"))
-
-    # Sparse half-steps + one dense completion, exactly hits()'s shape
-    # (see the comment there): absent rows are exact 0.0 no-ops in both
-    # the walk sums and the L1 norms, so the per-half-step dense
-    # `nodes` LEFT-join of the previous form was 2K redundant joins.
-    def _l1(raw: DataFrame, col: str) -> DataFrame:
-        norm = raw.agg(F.sum(F.col(col)).alias("__z"))
-        return (raw.crossJoin(F.broadcast(norm))
-                .select("node",
-                        (F.col(col) / F.col("__z")).alias(col)))
-
-    hub = nodes.select("node", F.lit(1.0).alias("hub"))
-    auth = None
-    for _ in range(iterations):
-        hside = F.broadcast(hub) if broadcast_scores else hub
-        araw = (en.join(hside, en["__a"] == hside["node"])
-                .select(F.col("__b").alias("node"),
-                        (F.col("hub") * F.col("__wa")).alias("hub"))
-                .groupBy("node").agg(F.sum("hub").alias("authority")))
-        if materialize:
-            # lazy raw-sum snapshot — the hits() rule: the norm
-            # aggregates this frame and the normalized scores divide
-            # it again, so the checkpoint stops the half-step subtree
-            # from being planned and executed twice
-            araw = araw.localCheckpoint(eager=False)
-        auth = _l1(araw, "authority")
-        aside = F.broadcast(auth) if broadcast_scores else auth
-        hraw = (en.join(aside, en["__b"] == aside["node"])
-                .select(F.col("__a").alias("node"),
-                        (F.col("authority") * F.col("__wh"))
-                        .alias("authority"))
-                .groupBy("node").agg(F.sum("authority").alias("hub")))
-        if materialize:
-            hraw = hraw.localCheckpoint(eager=False)
-        hub = _l1(hraw, "hub")
-    out = (nodes
-           .join(hub, "node", "left")
-           .join(auth, "node", "left")
-           .select("node",
-                   F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
-                   F.coalesce(F.col("authority"), F.lit(0.0))
-                   .alias("authority")))
-    if score_digits is not None:
-        out = out.select("node",
-                         F.round("hub", score_digits).alias("hub"),
-                         F.round("authority", score_digits)
-                         .alias("authority"))
-    return out.select("node", "hub", "authority")
-
-
-_LAST_REACH_ROUNDS: int | None = None
-_LAST_REACH_CONVERGED: bool | None = None
+    return _mutual_scores(en, "__a", "__b", nodes, iterations,
+                          F.col("__wa"), F.col("__wh"), F.sum,
+                          broadcast_scores, materialize, score_digits)
 
 
 def reachability(edges: DataFrame, src: str, dst: str,
@@ -758,7 +709,8 @@ def reachability(edges: DataFrame, src: str, dst: str,
                  rounds: int = 32, until_stable: bool = True,
                  materialize: bool = True,
                  broadcast_frontier: bool | None = None,
-                 on_cap: str = "silent") -> DataFrame:
+                 on_cap: str = "silent",
+                 stats: LoopStats | None = None) -> DataFrame:
     """Seed-set reachability closure over a directed edge list — the
     BFS primitive under Broder et al. 2000's bow-tie measurement
     (WWW9: IN/OUT/CORE are exactly backward-reach, forward-reach,
@@ -790,23 +742,15 @@ def reachability(edges: DataFrame, src: str, dst: str,
     ≤ 1M). ``on_cap`` escalates a cap-hit exactly like
     :func:`k_core` (the result is then a ≤rounds-hop LOWER bound of
     the closure — monotone, unverified; requires
-    ``until_stable=True`` to be meaningful, enforced);
-    ``_LAST_REACH_ROUNDS``/``_LAST_REACH_CONVERGED`` record the
-    run (same thread-unsafety caveat as the family's other
-    diagnostics)."""
+    ``until_stable=True`` to be meaningful, enforced); ``stats``
+    (a :class:`LoopStats`) receives the rounds executed and whether
+    the probe verified the closure — per call, so the two closures
+    host_bowtie runs on two driver threads each get their own."""
     if direction not in ("forward", "backward"):
         raise ValueError("direction must be 'forward' or 'backward'")
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    if until_stable and not materialize:
-        raise ValueError("until_stable requires materialize=True "
-                         "(each stability probe evaluates the plan)")
-    if on_cap not in ("silent", "warn", "raise"):
-        raise ValueError("on_cap must be 'silent', 'warn', or 'raise'")
-    if on_cap != "silent" and not until_stable:
-        raise ValueError("on_cap escalation requires until_stable=True "
-                         "(fixed-rounds runs never probe the fixpoint, "
-                         "so a cap-hit signal could not fire)")
+    _check_until_stable(until_stable, materialize, on_cap)
     require_free_columns("reachability", edges.columns,
                          _WORKING + ("__a", "__b"))
     require_free_columns("reachability", edges.columns, ("node",),
@@ -835,37 +779,28 @@ def reachability(edges: DataFrame, src: str, dst: str,
         # lazy: the until_stable baseline count (or round 1's semi-join
         # side / broadcast build) materializes it — no dedicated job
         reached = reached.localCheckpoint(eager=False)
-    global _LAST_REACH_ROUNDS, _LAST_REACH_CONVERGED
-    executed, converged = 0, None
-    n_prev = reached.count() if until_stable else None
-    for _ in range(rounds):
-        rside = (F.broadcast(reached.withColumnRenamed("node", "__a"))
-                 if broadcast_frontier
-                 else reached.withColumnRenamed("node", "__a"))
+
+    def _step(reached: DataFrame) -> DataFrame:
+        rside = reached.withColumnRenamed("node", "__a")
+        if broadcast_frontier:
+            rside = F.broadcast(rside)
         step = (el.join(rside, "__a", "left_semi")
                 .select(F.col("__b").alias("node")))
-        reached = reached.union(step).distinct()
-        if materialize:
-            # LAZY (r16): under until_stable the count probe right
-            # below materializes the snapshot in ITS job instead of a
-            # separate synchronous one per round (the CC discipline);
-            # under fixed rounds the chain materializes once inside
-            # the consumer's action cascade.
-            reached = reached.localCheckpoint(eager=False)
-        executed += 1
-        if until_stable:
-            n_now = reached.count()  # monotone: unchanged == closed
-            if n_now == n_prev:
-                converged = True
-                break
-            n_prev = n_now
-    if until_stable and converged is None:
-        converged = False
-    _LAST_REACH_ROUNDS, _LAST_REACH_CONVERGED = executed, converged
-    if converged is False:
-        _on_cap_signal("reachability", rounds, on_cap,
-                       bound="a monotone LOWER bound (the ≤rounds-hop "
-                             "neighborhood, a subset of the closure)")
+        return reached.union(step).distinct()
+
+    # the reached set only GROWS, so an unchanged count is the fixed
+    # point; under fixed rounds the chain of lazy snapshots
+    # materializes once inside the consumer's action cascade
+    reached = fixpoint(
+        reached, _step, rounds,
+        probe=(lambda new, _: new.count()) if until_stable else None,
+        baseline=reached.count() if until_stable else None,
+        checkpoint=materialize, on_cap=on_cap,
+        cap_message=_cap_message(
+            "reachability", rounds,
+            bound="a monotone LOWER bound (the ≤rounds-hop "
+                  "neighborhood, a subset of the closure)"),
+        stats=stats)
     return reached.select("node")
 
 
@@ -1072,7 +1007,8 @@ def k_core(edges: DataFrame, src: str, dst: str, k: int,
            rounds: int = 8, until_stable: bool = False,
            materialize: bool = True,
            broadcast_survivors: bool | None = None,
-           on_cap: str = "silent") -> DataFrame:
+           on_cap: str = "silent",
+           stats: LoopStats | None = None) -> DataFrame:
     """k-core peeling (Seidman 1983, public algorithm) over the edge
     list treated as UNDIRECTED: repeatedly remove every node whose
     degree among the SURVIVORS is below ``k``. The corpus-curation
@@ -1109,11 +1045,10 @@ def k_core(edges: DataFrame, src: str, dst: str, k: int,
     above that the semi-joins ship unhinted — a forced 90M-row
     broadcast twice per peel round would OOM the build side.
 
-    Convergence visibility (r14 VERDICT #2): the module diagnostics
-    ``_LAST_KCORE_ROUNDS`` / ``_LAST_KCORE_CONVERGED`` record the
-    rounds the call executed and whether ``until_stable`` VERIFIED
-    the fixed point (``None`` under fixed rounds — no probe runs).
-    ``on_cap`` escalates an ``until_stable`` run that exhausts the
+    Convergence visibility (r14 VERDICT #2): ``stats`` (a
+    :class:`LoopStats`) receives the rounds the call executed and
+    whether ``until_stable`` VERIFIED the fixed point (``None`` under
+    fixed rounds — no probe runs). ``on_cap`` escalates an ``until_stable`` run that exhausts the
     cap with the last round still shrinking: ``"silent"`` (default —
     the result is the documented monotone upper bound), ``"warn"``
     (RuntimeWarning), or ``"raise"`` (connected_components' loud
@@ -1126,15 +1061,7 @@ def k_core(edges: DataFrame, src: str, dst: str, k: int,
         raise ValueError("k must be >= 1")
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    if until_stable and not materialize:
-        raise ValueError("until_stable requires materialize=True "
-                         "(each stability probe evaluates the plan)")
-    if on_cap not in ("silent", "warn", "raise"):
-        raise ValueError("on_cap must be 'silent', 'warn', or 'raise'")
-    if on_cap != "silent" and not until_stable:
-        raise ValueError("on_cap escalation requires until_stable=True "
-                         "(fixed-rounds runs never probe the fixpoint, "
-                         "so a cap-hit signal could not fire)")
+    _check_until_stable(until_stable, materialize, on_cap)
     require_free_columns("k_core", edges.columns,
                          _WORKING + ("__a", "__b"))
     require_free_columns("k_core", edges.columns, ("node", "degree"),
@@ -1170,30 +1097,14 @@ def k_core(edges: DataFrame, src: str, dst: str, k: int,
                 .groupBy(F.col("__a").alias("node"))
                 .agg(F.count(F.lit(1)).alias("degree")))
 
-    global _LAST_KCORE_ROUNDS, _LAST_KCORE_CONVERGED
-    executed, converged = 0, None
-    for _ in range(rounds):
-        survivors = (_alive_degrees(survivors)
-                     .filter(F.col("degree") >= k).select("node"))
-        if materialize:
-            # LAZY (r16): the stability probe (or the next round's
-            # semi-join sides) materializes the snapshot inside its
-            # own job — one job per peel round instead of two
-            survivors = survivors.localCheckpoint(eager=False)
-        executed += 1
-        if until_stable:
-            n_now = survivors.count()  # bounded probe: one scalar
-            if n_now == n_prev:
-                converged = True
-                break
-            n_prev = n_now
-    if until_stable and converged is None:
-        converged = False
-    # diagnostics recorded BEFORE the escalation so a raise still
-    # leaves the cap-hit observable
-    _LAST_KCORE_ROUNDS, _LAST_KCORE_CONVERGED = executed, converged
-    if converged is False:
-        _on_cap_signal("k_core", rounds, on_cap)
+    survivors = fixpoint(
+        survivors,
+        lambda alive: (_alive_degrees(alive)
+                       .filter(F.col("degree") >= k).select("node")),
+        rounds,
+        probe=(lambda new, _: new.count()) if until_stable else None,
+        baseline=n_prev, checkpoint=materialize, on_cap=on_cap,
+        cap_message=_cap_message("k_core", rounds), stats=stats)
     # LEFT join from the survivor set: under fixed rounds a survivor
     # can lose its last surviving neighbor in the final round (kept
     # at round R because its count over survivors_{R-1} cleared k,
@@ -1315,7 +1226,8 @@ def core_number(edges: DataFrame, src: str, dst: str,
                 rounds: int = 8, until_stable: bool = False,
                 materialize: bool = True,
                 broadcast_values: bool | None = None,
-                on_cap: str = "silent") -> DataFrame:
+                on_cap: str = "silent",
+                stats: LoopStats | None = None) -> DataFrame:
     """Full core decomposition — per-node core NUMBER (the largest k
     for which the node survives k-core peeling) via the iterated
     H-index (Lü-Chen-Ren-Zhang-Zhang-Zhou 2016, Nature
@@ -1358,10 +1270,10 @@ def core_number(edges: DataFrame, src: str, dst: str,
     value table only when the node count reads ≤ 1M; above that the
     join ships unhinted and AQE decides.
 
-    Convergence visibility (r14 VERDICT #2): the module diagnostics
-    ``_LAST_CORE_ROUNDS`` / ``_LAST_CORE_CONVERGED`` record the
-    rounds executed and whether ``until_stable`` VERIFIED the fixed
-    point (``None`` under fixed rounds). ``on_cap`` escalates an
+    Convergence visibility (r14 VERDICT #2): ``stats`` (a
+    :class:`LoopStats`) receives the rounds executed and whether
+    ``until_stable`` VERIFIED the fixed point (``None`` under fixed
+    rounds). ``on_cap`` escalates an
     ``until_stable`` run that exhausts the cap with values still
     falling: ``"silent"`` (default — the result is the documented
     monotone upper bound on the coreness), ``"warn"``
@@ -1372,15 +1284,7 @@ def core_number(edges: DataFrame, src: str, dst: str,
 
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    if until_stable and not materialize:
-        raise ValueError("until_stable requires materialize=True "
-                         "(each stability probe evaluates the plan)")
-    if on_cap not in ("silent", "warn", "raise"):
-        raise ValueError("on_cap must be 'silent', 'warn', or 'raise'")
-    if on_cap != "silent" and not until_stable:
-        raise ValueError("on_cap escalation requires until_stable=True "
-                         "(fixed-rounds runs never probe the fixpoint, "
-                         "so a cap-hit signal could not fire)")
+    _check_until_stable(until_stable, materialize, on_cap)
     require_free_columns("core_number", edges.columns,
                          _WORKING + ("__a", "__b", "__c", "__rn"))
     require_free_columns("core_number", edges.columns,
@@ -1400,42 +1304,30 @@ def core_number(edges: DataFrame, src: str, dst: str,
     if broadcast_values is None:
         # bounded probe: the value table is one row per node
         broadcast_values = _gate_broadcast(None, vals.count())
-    s_prev = None
-    if until_stable:
-        s_prev = vals.agg(F.sum("__c")).first()[0]
     w = (Window.partitionBy("__a")
          .orderBy(F.col("__c").desc(), F.col("__b")))
-    global _LAST_CORE_ROUNDS, _LAST_CORE_CONVERGED
-    executed, converged = 0, None
-    for _ in range(rounds):
+
+    def _h_index(vals: DataFrame) -> DataFrame:
         vside = F.broadcast(vals) if broadcast_values else vals
         # H-index of the neighbor multiset: sort desc, rank, take
         # max(min(rank, value)) — a window over ONE adjacency list
-        vals = (nbr.join(vside, nbr["__b"] == vside["node"])
+        return (nbr.join(vside, nbr["__b"] == vside["node"])
                 .select("__a", "__b", "__c")
                 .withColumn("__rn", F.row_number().over(w))
                 .groupBy(F.col("__a").alias("node"))
                 .agg(F.max(F.least(F.col("__rn").cast("long"),
                                    F.col("__c")))
                      .alias("__c")))
-        if materialize:
-            # LAZY (r16): the sum probe (or next round's join side)
-            # materializes it — one job per H-index round, not two
-            vals = vals.localCheckpoint(eager=False)
-        executed += 1
-        if until_stable:
-            # monotone non-increasing values: an unchanged sum means
-            # every value is unchanged — one bounded scalar probe
-            s_now = vals.agg(F.sum("__c")).first()[0]
-            if s_now == s_prev:
-                converged = True
-                break
-            s_prev = s_now
-    if until_stable and converged is None:
-        converged = False
-    # diagnostics recorded BEFORE the escalation so a raise still
-    # leaves the cap-hit observable
-    _LAST_CORE_ROUNDS, _LAST_CORE_CONVERGED = executed, converged
-    if converged is False:
-        _on_cap_signal("core_number", rounds, on_cap)
+
+    def _value_sum(vals: DataFrame, _=None):
+        # monotone non-increasing values: an unchanged sum means
+        # every value is unchanged — one bounded scalar probe
+        return vals.agg(F.sum("__c")).first()[0]
+
+    vals = fixpoint(
+        vals, _h_index, rounds,
+        probe=_value_sum if until_stable else None,
+        baseline=_value_sum(vals) if until_stable else None,
+        checkpoint=materialize, on_cap=on_cap,
+        cap_message=_cap_message("core_number", rounds), stats=stats)
     return vals.select("node", F.col("__c").alias("core"))

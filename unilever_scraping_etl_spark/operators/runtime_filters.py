@@ -124,7 +124,7 @@ def bloom_probe(key_col: str | Column, bf: BloomFilter) -> Column:
     # a Python list element-by-element (2048 words -> ~1.2 s of driver
     # time building the plan, measured); the parser takes the same
     # array as a single string in milliseconds. Plan-pinned in
-    # test_probe_plan_builds_fast.
+    # test_probe_plan_carries_one_parsed_word_table.
     lut = F.expr("array(" + ",".join(f"{w}L" for w in words) + ")")
     out = None
     for i in range(num_hashes):
