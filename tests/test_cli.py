@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from unilever_scraping_etl_spark.__main__ import build_fetcher, main
 from unilever_scraping_etl_spark.plans.fixtures import shop_pipeline_pages
 
@@ -47,6 +49,16 @@ def test_cli_dead_shop_writes_nothing(spark, tmp_path, capsys):
     assert summary["last_pages"] == {"ghost": 0}
     assert summary["valid_rows"] == 0
     assert not out.exists()                        # no empty-snapshot litter
+
+
+@pytest.mark.parametrize("flag", ["--probe-step", "--max-pages"])
+@pytest.mark.parametrize("value", ["0", "-5"])
+def test_cli_rejects_probe_bounds_below_one(tmp_path, capsys, flag, value):
+    with pytest.raises(SystemExit) as exc:
+        main(["run", "--shops", "shopx", "--fetcher", "fixture:unused.json",
+              "--out", str(tmp_path / "snap"), flag, value])
+    assert exc.value.code == 2
+    assert f"argument {flag}: must be >= 1" in capsys.readouterr().err
 
 
 def test_build_fetcher_specs(tmp_path):

@@ -6,11 +6,14 @@ scrap_tokopedia.py:98-114).
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
 from unilever_scraping_etl_spark.plans.fixtures import catalog_html, product_html
 from unilever_scraping_etl_spark.sources import ingest
+from unilever_scraping_etl_spark.sources.extraction import DEFAULT_SPEC
 from unilever_scraping_etl_spark.sources.fetcher import (FallbackFetcher,
                                                          FetchResult,
                                                          FixtureFetcher)
@@ -82,6 +85,150 @@ def test_find_last_valid_page_no_valid_pages(spark):
     last = ingest.find_last_valid_page(
         spark, "https://x.com/none", FixtureFetcher({}), step=10, max_pages=30)
     assert last == 0
+
+
+@pytest.mark.parametrize("kw,arg", [
+    ({"step": 0}, "step"), ({"step": -10}, "step"),
+    ({"max_pages": 0}, "max_pages"), ({"max_pages": -1}, "max_pages")])
+def test_find_last_valid_page_rejects_bad_arguments(spark, kw, arg):
+    """step=0 used to raise a bare range() error, and a negative step
+    emptied both probe lists, so a 59-page shop came back as page 1."""
+    with pytest.raises(ValueError, match=f"{arg} must be >= 1"):
+        ingest.find_last_valid_page(
+            spark, "https://x.com/shop", FixtureFetcher({}), **kw)
+
+
+def _jobs_in_group(spark, run):
+    """Result of ``run()`` and the number of Spark jobs it launched."""
+    sc = spark.sparkContext
+    group = f"ingest-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_find_last_valid_page_skips_empty_fine_phase(spark):
+    """The last coarse probe (page 20 = max_pages) is valid, so there is
+    no page left for the fine phase and no second job may run."""
+    base = "https://www.tokopedia.com/shopz"
+    pages = {base: catalog_html([("shopz/i1", False)])}
+    for p in range(2, 30):
+        pages[f"{base}/page/{p}"] = catalog_html([(f"shopz/i{p}", False)])
+    last, jobs = _jobs_in_group(spark, lambda: ingest.find_last_valid_page(
+        spark, base, FixtureFetcher(pages), step=10, max_pages=20))
+    assert last == 20
+    assert jobs == 1
+
+
+def _physical_nodes(plan):
+    """Every operator of a physical plan, the plans behind cached scans
+    included (the scrape and probe plans have no exchange, so AQE does
+    not wrap them)."""
+    yield plan
+    if plan.nodeName() == "InMemoryTableScan":
+        yield from _physical_nodes(plan.relation().cachedPlan())
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _physical_nodes(kids.apply(i))
+
+
+def _plan_shape(df):
+    """(node names, Python node names, output column names) of the
+    executed plan of ``df``."""
+    nodes = list(_physical_nodes(df._jdf.queryExecution().executedPlan()))
+    names = [n.nodeName() for n in nodes]
+    python = [n.nodeName() for n in nodes if n.getClass().getName()
+              .startswith("org.apache.spark.sql.execution.python.")]
+    columns = set()
+    for n in nodes:
+        out = n.output()
+        columns.update(out.apply(i).name() for i in range(out.size()))
+    return names, python, columns
+
+
+def test_scrape_plan_fetches_and_extracts_in_one_python_node(spark, shop_fixture):
+    """Each fetch stage extracts in its own batch loop: two MapInPandas
+    nodes for the scrape, one for the probe, no Arrow/Batch UDF node,
+    and no operator ever carries the page HTML."""
+    base, fetcher = shop_fixture
+    valid, _ = ingest.scrape_to_snapshot(spark, ["shopx"], fetcher, {"shopx": 2})
+    valid.collect()
+    names, python, columns = _plan_shape(valid)
+    assert python == ["MapInPandas", "MapInPandas"], names
+    assert "html" not in columns
+
+    probe = ingest._probe_frame(spark, base, [1, 2], fetcher, DEFAULT_SPEC)
+    assert {r["page"]: r["valid"] for r in probe.collect()} == {1: 1, 2: 2}
+    names, python, columns = _plan_shape(probe)
+    assert python == ["MapInPandas"], names
+    assert "html" not in columns
+
+
+def test_scrape_persist_fetches_every_url_once(spark, shop_fixture, tmp_path):
+    """persist=True: writing the valid AND the quarantined sink fetches
+    each catalog and product URL exactly once."""
+    from collections import Counter
+
+    from pyspark.accumulators import AccumulatorParam
+
+    class CounterParam(AccumulatorParam):
+        def zero(self, value):
+            return Counter()
+
+        def addInPlace(self, a, b):
+            a.update(b)
+            return a
+
+    _, inner = shop_fixture
+    seen = spark.sparkContext.accumulator(Counter(), CounterParam())
+
+    def counting(url):
+        seen.add(Counter([url]))
+        return inner(url)
+
+    valid, quarantined = ingest.scrape_to_snapshot(
+        spark, ["shopx"], counting, {"shopx": 2}, persist=True)
+    try:
+        ingest.write_snapshot(valid, str(tmp_path / "snap"))
+        quarantined.write.parquet(str(tmp_path / "rejects"))
+    finally:
+        spark.catalog.clearCache()
+    shop = "https://www.tokopedia.com/shopx"
+    assert seen.value == Counter({shop: 1, f"{shop}/page/2": 1, f"{shop}/p1": 1,
+                                  f"{shop}/p3": 1, f"{shop}/p4": 1})
+
+
+def test_scrape_path_matches_html_frame_path(spark):
+    """The fused scrape path and parse_products(fetch_pages(...)) over
+    the same product URLs give identical typed rows, NULL detail and
+    original price and the quarantine reasons included."""
+    from unilever_scraping_etl_spark.operators.quarantine import (
+        quarantine_split, required_fields_rules)
+    from unilever_scraping_etl_spark.plans.fixtures import shop_pipeline_pages
+
+    fetcher = FixtureFetcher(shop_pipeline_pages())
+    fused = ingest.scrape_to_snapshot(spark, ["shopx"], fetcher, {"shopx": 2})
+    shop = "https://www.tokopedia.com/shopx"
+    urls = spark.createDataFrame(
+        [(f"{shop}/p1",), (f"{shop}/p3",), (f"{shop}/p4",)], "url string")
+    parsed = ingest.parse_products(ingest.fetch_pages(urls, fetcher))
+    framed = quarantine_split(parsed, required_fields_rules("name", "price"))
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assert rows(fused[0]) == rows(framed[0])
+    assert rows(fused[1]) == rows(framed[1])
+    assert fused[0].columns == framed[0].columns
+    assert fused[1].columns == framed[1].columns
+    valid = {r["name"]: r for r in fused[0].collect()}
+    assert valid["Item Three"]["detail"] is None
+    assert valid["Item Three"]["originalprice"] is None
+    assert [r["quarantine_reason"] for r in fused[1].collect()] == [["missing_price"]]
 
 
 def test_fallback_fetcher_uses_secondary_result():

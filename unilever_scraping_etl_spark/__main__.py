@@ -44,6 +44,13 @@ def build_fetcher(spec: str):
         f"unknown --fetcher {spec!r}; expected fixture:<json>|http|browser|auto")
 
 
+def _positive_int(text: str) -> int:
+    value = int(text)
+    if value < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {value}")
+    return value
+
+
 def _parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="python -m unilever_scraping_etl_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -58,8 +65,8 @@ def _parser() -> argparse.ArgumentParser:
                      help="optional parquet dir for rejected rows")
     run.add_argument("--base-url", default="https://www.tokopedia.com/",
                      help="catalog base; shop slug is appended")
-    run.add_argument("--probe-step", type=int, default=10)
-    run.add_argument("--max-pages", type=int, default=1000)
+    run.add_argument("--probe-step", type=_positive_int, default=10)
+    run.add_argument("--max-pages", type=_positive_int, default=1000)
     run.add_argument("--fetch-partitions", type=int, default=None,
                      help="politeness knob: fetch parallelism")
     run.add_argument("--master", default=None,

@@ -8,10 +8,10 @@ generic Arrow-batched extract functions, and implement matching on a
 minimal stdlib ``html.parser`` DOM (clean-room; bs4 is not a
 dependency).
 
-Extraction UDFs emit RAW STRINGS; typing/parsing (Rupiah, percent) is
-done afterwards by JVM-side expressions in functions/scalars.py — the
-Python boundary does only what Python must (DOM walking), everything
-else stays in codegen.
+The row-level extract functions emit RAW STRINGS; typing/parsing
+(Rupiah, percent) is done afterwards by JVM-side expressions in
+functions/scalars.py — the Python boundary does only what Python must
+(fetching and DOM walking), everything else stays in codegen.
 """
 
 from __future__ import annotations
@@ -169,7 +169,8 @@ DEFAULT_SPEC = ExtractionSpec(
 
 
 # ---------------------------------------------------------------------------
-# Row-level extract functions (wrapped into Arrow-batched UDFs by ingest.py)
+# Row-level extract functions (run inside the fetch loop, or as Arrow UDFs
+# over HTML columns, by ingest.py)
 # ---------------------------------------------------------------------------
 
 def extract_links(html: str | None, spec: ExtractionSpec = DEFAULT_SPEC) -> list[str]:
@@ -219,8 +220,8 @@ def links_udtf(spec: ExtractionSpec = DEFAULT_SPEC):
     """U2 as a real Python UDTF (Spark 3.5+ table function): one catalog
     page row in, one row per active product link out — the table-valued
     form of extract_links for SQL users (``SELECT u.* FROM pages,
-    LATERAL extract_links(html) u``). The Arrow-batched array+explode
-    path in ingest.catalog_links remains the bulk route; this is the
+    LATERAL extract_links(html) u``). The bulk routes are ingest's
+    fetch-and-extract scrape stage and ingest.catalog_links; this is the
     SQL-surface equivalent."""
     from pyspark.sql.functions import udtf
 

@@ -4,18 +4,23 @@ Reference architecture (scrap_tokopedia.py:299-328): a per-shop Python
 loop, two levels of nested ProcessPoolExecutor(5), per-row INSERTs.
 Spark-first architecture here:
 
-    seed shops ──▶ explode page sequence ──▶ mapInPandas(fetch)
-      ──▶ extract links (Arrow UDF) ──▶ explode ──▶ mapInPandas(fetch)
-      ──▶ extract raw fields (Arrow UDF) ──▶ JVM-side parse/typing
+    seed shops ──▶ explode page sequence
+      ──▶ mapInPandas(fetch + extract links) ──▶ explode
+      ──▶ mapInPandas(fetch + extract raw fields) ──▶ JVM-side parse/typing
       ──▶ quarantine split ──▶ partitioned parquet snapshot / JDBC
 
-Every stage is narrow (no shuffle until a sink repartition), fetch
+Fetch and DOM extraction run in the same Python batch loop, so a page's
+HTML never enters the JVM: only the extracted links or raw field
+strings cross the Arrow boundary, one Python node per stage. Every
+stage is narrow (no shuffle until a sink repartition), fetch
 parallelism is governed by partition count instead of hardcoded pool
 widths, and row-level tolerance is an explicit quarantine split instead
 of scattered try/except (SURVEY.md §4).
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -27,7 +32,7 @@ from ..operators.quarantine import quarantine_split, required_fields_rules
 from ..schemas import local_df
 from .extraction import (DEFAULT_SPEC, ExtractionSpec, extract_links,
                          extract_product_raw, page_stats)
-from .fetcher import Fetcher
+from .fetcher import Fetcher, FetchResult
 
 FETCH_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
@@ -35,33 +40,6 @@ FETCH_SCHEMA = T.StructType([
     T.StructField("html", T.StringType()),
     T.StructField("fetcher", T.StringType()),
 ])
-
-
-def fetch_pages(urls: DataFrame, fetcher: Fetcher, url_col: str = "url",
-                partitions: int | None = None) -> DataFrame:
-    """Fetch every URL in the frame via mapInPandas. Parallelism = the
-    frame's partition count (the politeness knob that replaces the
-    reference's hardcoded 5×5 pools); other columns pass through."""
-    if partitions:
-        urls = urls.repartition(partitions)
-    passthrough = [f for f in urls.schema.fields if f.name != url_col]
-    out_schema = T.StructType(list(FETCH_SCHEMA.fields) + passthrough)
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                res = fetcher(row[url_col])
-                rec = {"url": res.url, "status": res.status,
-                       "html": res.html, "fetcher": res.fetcher}
-                for f in passthrough:
-                    rec[f.name] = row[f.name]
-                rows.append(rec)
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
-
-    return urls.mapInPandas(run, out_schema)
-
-
 LINKS_TYPE = T.ArrayType(T.StringType())
 STATS_TYPE = T.StructType([
     T.StructField("valid", T.IntegerType()),
@@ -75,6 +53,46 @@ RAW_PRODUCT_TYPE = T.StructType([
     T.StructField("originalprice_raw", T.StringType()),
     T.StructField("discount_raw", T.StringType()),
 ])
+
+
+def _fetch_extract(urls: DataFrame, fetcher: Fetcher,
+                   extract: Callable[[FetchResult], tuple],
+                   fields: list[T.StructField], url_col: str = "url",
+                   partitions: int | None = None) -> DataFrame:
+    """Fetch every URL and run ``extract(FetchResult) -> tuple`` on the
+    result in the same mapInPandas batch loop: only ``fields`` (then the
+    frame's other columns, passed through) come back to the JVM.
+    Parallelism = the frame's partition count (the politeness knob that
+    replaces the reference's hardcoded 5×5 pools)."""
+    if partitions:
+        urls = urls.repartition(partitions)
+    passthrough = [f for f in urls.schema.fields if f.name != url_col]
+    out_schema = T.StructType(list(fields) + passthrough)
+    names = [f.name for f in fields]
+
+    def run(batches):
+        for pdf in batches:
+            out = pd.DataFrame([extract(fetcher(u)) for u in pdf[url_col]],
+                               columns=names, index=pdf.index)
+            for f in passthrough:
+                out[f.name] = pdf[f.name]
+            yield out
+
+    return urls.mapInPandas(run, out_schema)
+
+
+def _fetched_row(res: FetchResult) -> tuple:
+    return (res.url, res.status, res.html, res.fetcher)
+
+
+def fetch_pages(urls: DataFrame, fetcher: Fetcher, url_col: str = "url",
+                partitions: int | None = None) -> DataFrame:
+    """Fetch every URL in the frame into (url, status, html, fetcher)
+    rows via mapInPandas; other columns pass through. For callers that
+    need the HTML itself — the scrape path extracts inside the fetch
+    loop instead (``scrape_to_snapshot``)."""
+    return _fetch_extract(urls, fetcher, _fetched_row, FETCH_SCHEMA.fields,
+                          url_col, partitions)
 
 
 def _links_udf(spec: ExtractionSpec):
@@ -118,13 +136,10 @@ def catalog_page_stats(pages: DataFrame, spec: ExtractionSpec = DEFAULT_SPEC) ->
             .select(*[c for c in pages.columns if c != "html"], "s.*"))
 
 
-def parse_products(pages: DataFrame, spec: ExtractionSpec = DEFAULT_SPEC,
-                   platform: str = "tokopedia") -> DataFrame:
-    """Fetched product pages -> typed rows matching the reference's
-    tr_raw_scrap_data (scrap_tokopedia.py:80-91). Raw strings come out
-    of the Arrow UDF; Rupiah/percent/date typing happens in JVM
-    expressions (functions/scalars.py)."""
-    raw = pages.withColumn("p", _product_udf(spec)(F.col("html")))
+def _typed_products(raw: DataFrame, platform: str) -> DataFrame:
+    """(url, p: RAW_PRODUCT_TYPE) -> typed rows matching the reference's
+    tr_raw_scrap_data (scrap_tokopedia.py:80-91). Rupiah/percent/date
+    typing happens in JVM expressions (functions/scalars.py)."""
     return raw.select(
         F.col("url"),
         F.trim(F.col("p.name_raw")).alias("name"),
@@ -137,6 +152,15 @@ def parse_products(pages: DataFrame, spec: ExtractionSpec = DEFAULT_SPEC,
     )
 
 
+def parse_products(pages: DataFrame, spec: ExtractionSpec = DEFAULT_SPEC,
+                   platform: str = "tokopedia") -> DataFrame:
+    """Product pages that already hold their HTML -> typed rows. Raw
+    strings come out of the Arrow UDF; the typing is the scrape path's
+    (``_typed_products``)."""
+    return _typed_products(
+        pages.withColumn("p", _product_udf(spec)(F.col("html"))), platform)
+
+
 def scrape_to_snapshot(spark: SparkSession, shops: list[str], fetcher: Fetcher,
                        last_pages: dict[str, int],
                        spec: ExtractionSpec = DEFAULT_SPEC,
@@ -146,7 +170,8 @@ def scrape_to_snapshot(spark: SparkSession, shops: list[str], fetcher: Fetcher,
     """Full pipeline: shops -> catalog pages -> links -> product rows,
     split into (valid, quarantined). UNION-of-shops is inherent: all
     shops live in one frame (SURVEY.md O3) instead of the reference's
-    sequential loop (scrap_tokopedia.py:324-328).
+    sequential loop (scrap_tokopedia.py:324-328). Each fetch stage
+    extracts in its own batch loop, so no HTML column reaches the JVM.
 
     ``persist=True`` caches the parsed-product frame BEFORE the
     quarantine split: both returned frames derive from it, so a caller
@@ -158,15 +183,21 @@ def scrape_to_snapshot(spark: SparkSession, shops: list[str], fetcher: Fetcher,
                     "shop string, last_page int")
     pages = seed.select(
         "shop", F.explode(F.sequence(F.lit(1), F.col("last_page"))).alias("page"))
-    pages = pages.withColumn(
-        "url", scalars.page_url(F.concat(F.lit("https://www.tokopedia.com/"),
-                                         F.col("shop")), F.col("page")))
-    fetched_catalogs = fetch_pages(pages, fetcher, partitions=fetch_partitions)
-    links = catalog_links(fetched_catalogs, spec)
-    product_urls = links.withColumn("url", scalars.product_url(F.col("link")))
-    fetched_products = fetch_pages(
-        product_urls.select("shop", "url"), fetcher, partitions=fetch_partitions)
-    products = parse_products(fetched_products, spec)
+    pages = pages.select("shop", scalars.page_url(
+        F.concat(F.lit("https://www.tokopedia.com/"), F.col("shop")),
+        F.col("page")).alias("url"))
+    catalogs = _fetch_extract(
+        pages, fetcher, lambda res: (extract_links(res.html, spec),),
+        [T.StructField("links", LINKS_TYPE)], partitions=fetch_partitions)
+    product_urls = (catalogs.select("shop", F.explode("links").alias("link"))
+                    .select("shop", scalars.product_url(F.col("link")).alias("url")))
+    raw = _fetch_extract(
+        product_urls, fetcher,
+        lambda res: (res.url, extract_product_raw(res.html, spec)),
+        [T.StructField("url", T.StringType()),
+         T.StructField("p", RAW_PRODUCT_TYPE)],
+        partitions=fetch_partitions)
+    products = _typed_products(raw, "tokopedia")
     if persist:
         products = products.persist()
     valid, quarantined = quarantine_split(
@@ -364,6 +395,16 @@ def read_jdbc(spark: SparkSession, conn: dict, table: str,
     return spark.read.format("jdbc").options(**opts).load()
 
 
+def _probe_frame(spark: SparkSession, base_url: str, page_nums: list[int],
+                 fetcher: Fetcher, spec: ExtractionSpec) -> DataFrame:
+    """(valid, page) for the given catalog pages of ``base_url``: one
+    fetch-and-count Python node, no HTML column."""
+    urls = local_df(spark, [(p,) for p in page_nums], "page int") \
+        .withColumn("url", scalars.page_url(F.lit(base_url), F.col("page")))
+    return _fetch_extract(urls, fetcher, lambda res: (page_stats(res.html, spec)[0],),
+                          [T.StructField("valid", T.IntegerType())])
+
+
 def find_last_valid_page(spark: SparkSession, base_url: str, fetcher: Fetcher,
                          spec: ExtractionSpec = DEFAULT_SPEC, step: int = 10,
                          max_pages: int = 1000) -> int:
@@ -371,15 +412,18 @@ def find_last_valid_page(spark: SparkSession, base_url: str, fetcher: Fetcher,
     the reference's sequential probe (scrap_tokopedia.py:153-186, which
     can loop forever on a dead page). Spark-first twist: each phase
     probes a BATCH of candidate pages in one job (they're independent),
-    so the search is 2 jobs instead of O(last/step) sequential fetches.
+    so the search is at most 2 jobs instead of O(last/step) sequential
+    fetches; the fine phase is skipped when the last valid coarse probe
+    is ``max_pages`` itself.
     """
-    from ..operators.relational import page_sequence
+    if step < 1:
+        raise ValueError(f"find_last_valid_page: step must be >= 1, got {step}")
+    if max_pages < 1:
+        raise ValueError(
+            f"find_last_valid_page: max_pages must be >= 1, got {max_pages}")
 
     def stats_for(page_nums: list[int]) -> dict[int, int]:
-        urls = local_df(spark, [(p,) for p in page_nums], "page int") \
-            .withColumn("url", scalars.page_url(F.lit(base_url), F.col("page")))
-        fetched = fetch_pages(urls, fetcher)
-        rows = catalog_page_stats(fetched, spec).select("page", "valid").collect()
+        rows = _probe_frame(spark, base_url, page_nums, fetcher, spec).collect()
         return {r["page"]: r["valid"] for r in rows}
 
     probes = list(range(step, max_pages + 1, step))
@@ -388,6 +432,8 @@ def find_last_valid_page(spark: SparkSession, base_url: str, fetcher: Fetcher,
     if not valid_pages:
         return 0
     lo = max(valid_pages)
-    fine = stats_for(list(range(lo + 1, min(lo + step, max_pages) + 1)))
-    valid_fine = [p for p, v in fine.items() if v > 0]
-    return max([lo] + valid_fine)
+    candidates = list(range(lo + 1, min(lo + step, max_pages) + 1))
+    if not candidates:
+        return lo
+    fine = stats_for(candidates)
+    return max([lo] + [p for p, v in fine.items() if v > 0])
