@@ -220,6 +220,44 @@ def _cos(a, b):
                 * math.sqrt(sum(y * y for y in b)))
 
 
+def _sem_ref(rows, n_seeds, tau):
+    """Pure-Python SemDeDup over ``(id, vec)`` rows, written from the
+    oracle's definition: seeds are the n_seeds smallest ids, each
+    vector joins the seed of highest 6-digit cosine (ties: smaller
+    seed id), and a member of an in-cluster pair with 4-digit cosine
+    >= tau is removed unless it is the farther from the seed (ties:
+    the smaller id stays). Returns {id: (cluster, centroid_sim,
+    removed)}."""
+    vecs = dict(rows)
+    ids = sorted(vecs)
+    seeds = ids[:n_seeds]
+    csim, cluster = {}, {}
+    for i in ids:
+        sims = {s: round(_cos(vecs[i], vecs[s]), 6) for s in seeds}
+        best = max(sims.values())
+        cluster[i] = min(s for s in seeds if sims[s] == best)
+        csim[i] = sims[cluster[i]]
+    removed = set()
+    for x in ids:
+        for y in ids:
+            if (x != y and cluster[x] == cluster[y]
+                    and round(_cos(vecs[x], vecs[y]), 4) >= tau
+                    and (csim[y] < csim[x]
+                         or (csim[y] == csim[x] and y < x))):
+                removed.add(x)
+    return {i: (cluster[i], csim[i], i in removed) for i in ids}
+
+
+def _assert_sem_matches(out, want):
+    got = {r["vec_id"]: (r["cluster_id"], r["centroid_sim"], r["removed"])
+           for r in out}
+    assert set(got) == set(want)
+    for k, (cluster, csim, removed) in want.items():
+        assert got[k][0] == cluster, k
+        assert got[k][1] == pytest.approx(csim, abs=1e-12), k
+        assert got[k][2] == removed, k
+
+
 def test_semdedup_matches_hand_fixture(spark):
     emb = spark.createDataFrame(SEM_ROWS, "vec_id long, embedding array<double>")
     out = {r["vec_id"]: (r["cluster_id"], r["centroid_sim"], r["removed"])
@@ -244,70 +282,99 @@ def test_semdedup_matches_hand_fixture(spark):
 
 
 def test_semdedup_gemm_rounds_half_up(spark):
-    """r16 ADVICE (medium): the GEMM kernel must round pair cosines
-    HALF_UP (away from zero — F.round's and the oracle's mode), not
-    numpy's default half-even. Pins the divergence case directly: a
-    pair cosine of exactly 0.25 (representable in binary) at
-    round_pair=1 rounds to 0.3 under HALF_UP (qualifying at
-    threshold 0.3) and to 0.2 under np.round (not qualifying)."""
+    """Every numpy cosine kernel rounds like the DuckDB oracle's
+    round(DOUBLE, d): half away from zero on the binary double
+    (similarity._round_half_up). Not numpy's half-even np.round (0.25
+    at 1 digit: 0.2; 0.125 at 2: 0.12), and not Spark's F.round, which
+    rounds the double's SHORTEST DECIMAL form half-up (0.285 at 2:
+    0.29; 1.005 at 2: 1.01) where DuckDB gives 0.28 and 1.00. Checked
+    against DuckDB on every 4-digit half (k + 0.5) / 1e4, 200k uniform
+    cosines and the hand-picked edges, then through the semdedup
+    kernel and a grid kernel."""
+    import duckdb
     import numpy as np
+    import pandas as pd
 
-    # Spark-side semantics we mirror:
-    assert spark.range(1).select(
-        F.round(F.lit(0.25), 1).alias("r")).first()["r"] == 0.3
-    assert float(np.round(0.25, 1)) == 0.2  # the bug this guards
-    got = curation._round_half_up(np.array([0.25, -0.25, 0.15, 1.0]), 1)
-    assert got.tolist() == [0.3, -0.3, 0.2, 1.0]  # 0.15 is not exact
-    # Kernel-level: dot = 1.0, carried norms 1.0 * 4.0 -> cos 0.25.
+    from unilever_scraping_etl_spark.operators import dedup, similarity
+
+    def duck(xs, digits):
+        frame = pd.DataFrame({"i": np.arange(len(xs)), "x": xs})
+        return duckdb.sql(f"SELECT round(x, {digits}) AS r FROM frame "
+                          "ORDER BY i").fetchnumpy()["r"]
+
+    ties = (np.arange(20_000) + 0.5) / 1e4
+    uniform = np.random.default_rng(7).uniform(-1.0, 1.0, 200_000)
+    cases = {
+        4: np.concatenate([ties, -ties, uniform]),
+        2: np.array([0.125, -0.125, 0.285, 1.005, 0.375, 0.625]),
+        1: np.array([0.25, -0.25, 0.15, 1.0]),
+        0: np.array([0.49999999999999994, -0.49999999999999994,
+                     0.5, 1.5, 2.5]),
+    }
+    for digits, xs in cases.items():
+        want = duck(xs, digits)
+        got = similarity._round_half_up(xs, digits)
+        assert np.array_equal(got, want), digits
+    assert (np.round(ties, 4) != duck(ties, 4)).any()  # the bug guarded
+    assert duck(np.array([0.285, 1.005]), 2).tolist() == [0.28, 1.0]
+    assert tuple(spark.range(1).select(
+        F.round(F.lit(0.285), 2), F.round(F.lit(1.005), 2)).first()) == (
+        0.29, 1.01)  # F.round is not the contract
+    # Semdedup kernel: dot = 1.0, carried norms 1.0 * 4.0 -> cos 0.25,
+    # which qualifies at threshold 0.3 only when rounded half away.
     av = spark.createDataFrame(
         [(1, 0, 0.9, [1.0, 0.0], 1.0), (2, 0, 0.1, [1.0, 0.0], 4.0)],
         "vec_id long, cluster_id long, centroid_sim double, "
         "__e array<double>, __n double")
     removed = {r["vec_id"] for r in curation._semdedup_prune_gemm(
         av, "vec_id", threshold=0.3, round_pair=1).collect()}
-    assert removed == {1}  # qualifies under HALF_UP; loser is the
-    # member closer to the centroid (keep-far rule)
+    assert removed == {1}  # loser: the member closer to the centroid
+    # Grid kernel: norms of 8 make the cosines exact dyadic ties at 2
+    # digits: 1/8, 5/8 and 54/64.
+    emb = spark.createDataFrame(
+        [(0, [8.0, 0.0, 0.0, 0.0, 0.0]), (1, [1.0, 7.0, 3.0, 2.0, 1.0]),
+         (2, [5.0, 5.0, 3.0, 2.0, 1.0])],
+        "vec_id long, embedding array<double>")
+    got = sorted(map(tuple, dedup.embedding_near_pairs_grid(
+        emb, "vec_id", "embedding", threshold=0.0, n_blocks=2,
+        round_digits=2).collect()))
+    want = duck(np.array([0.125, 0.625, 0.84375]), 2).tolist()
+    assert got == [(0, 1, want[0]), (0, 2, want[1]), (1, 2, want[2])]
 
 
 def test_semdedup_gemm_degenerate_inputs_match_expr(spark):
-    """r16 ADVICE (low): degenerate vectors must behave identically in
-    both pair kernels. NULL vectors null-propagate (their pairs never
-    qualify; the old GEMM kernel crashed in np.vstack) — parity is
-    asserted on the full output. ZERO-NORM vectors are a loud
-    DIVIDE_BY_ZERO in the shared ANSI assignment stage for BOTH
-    kernels (Spark 4 default), pinned here so a silent-semantics
-    change resurfaces."""
-    import pytest as _pytest
-
+    """r16 ADVICE (low): degenerate vectors follow SQL semantics. A
+    NULL vector null-propagates: its pairs never qualify (the GEMM
+    must not feed it to np.vstack), it keeps the smallest seed with a
+    NULL centroid_sim, and every other row matches the pure-Python
+    reference run without it. A ZERO-NORM vector is a loud
+    DIVIDE_BY_ZERO in the ANSI assignment stage (Spark 4 default),
+    pinned here so a silent-semantics change resurfaces."""
     rows = [(0, [1.0, 0.0]), (1, [0.0, 1.0]),
-            (2, [0.9999, 0.01]), (3, [0.999, 0.02]),
-            (90, None)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    want = {(r["vec_id"], r["cluster_id"], r["centroid_sim"], r["removed"])
-            for r in curation.semdedup(emb, "vec_id", "embedding", n_seeds=2,
-                                       threshold=0.995,
-                                       pairs="expr").collect()}
-    got = {(r["vec_id"], r["cluster_id"], r["centroid_sim"], r["removed"])
-           for r in curation.semdedup(emb, "vec_id", "embedding", n_seeds=2,
-                                      threshold=0.995,
-                                      pairs="gemm").collect()}
-    assert got == want
-    assert not any(v == 90 and r for v, _c, _s, r in got)  # null: never
-    assert any(r for _v, _c, _s, r in got)  # real dups still found
-    zero = spark.createDataFrame(rows[:4] + [(91, [0.0, 0.0])],
+            (2, [0.9999, 0.01]), (3, [0.999, 0.02])]
+    emb = spark.createDataFrame(rows + [(90, None)],
+                                "vec_id long, embedding array<double>")
+    out = curation.semdedup(emb, "vec_id", "embedding", n_seeds=2,
+                            threshold=0.995).collect()
+    want = _sem_ref(rows, 2, 0.995)
+    assert any(removed for _c, _s, removed in want.values())  # real dups
+    _assert_sem_matches([r for r in out if r["vec_id"] != 90], want)
+    assert [tuple(r) for r in out if r["vec_id"] == 90] == [
+        (90, 0, None, False)]
+    zero = spark.createDataFrame(rows + [(91, [0.0, 0.0])],
                                  "vec_id long, embedding array<double>")
-    for kernel in ("expr", "gemm"):
-        with _pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-            curation.semdedup(zero, "vec_id", "embedding", n_seeds=2,
-                              threshold=0.995, pairs=kernel).collect()
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        curation.semdedup(zero, "vec_id", "embedding", n_seeds=2,
+                          threshold=0.995).collect()
 
 
 def test_semdedup_gemm_blocked_path_matches(spark, monkeypatch):
     """r16 VERDICT item 2: one deliberately hot cluster must run the
     BLOCKED GEMM (bounded B x K pair-matrix slices, no O(K^2)
-    allocation) and still reproduce the expression kernel exactly.
-    Forces every vector into one cluster (n_seeds=1) and a tiny block
-    so the hot path is exercised, not whitelisted away."""
+    allocation), give exactly the unblocked output, and match the
+    pure-Python reference. Forces every vector into one cluster
+    (n_seeds=1) and a tiny block so the hot path is exercised, not
+    whitelisted away."""
     import random
 
     rng = random.Random(7)
@@ -318,18 +385,14 @@ def test_semdedup_gemm_blocked_path_matches(spark, monkeypatch):
         rows.append((i, v))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     monkeypatch.setenv("SPARK_GRAFT_SEMDEDUP_BLOCK", "16")
-    blocked = sorted(map(tuple, curation.semdedup(
-        emb, "vec_id", "embedding", n_seeds=1, threshold=0.999,
-        pairs="gemm").collect()))
+    blocked = curation.semdedup(emb, "vec_id", "embedding", n_seeds=1,
+                                threshold=0.999).collect()
     monkeypatch.delenv("SPARK_GRAFT_SEMDEDUP_BLOCK")
-    whole = sorted(map(tuple, curation.semdedup(
-        emb, "vec_id", "embedding", n_seeds=1, threshold=0.999,
-        pairs="gemm").collect()))
-    expr = sorted(map(tuple, curation.semdedup(
-        emb, "vec_id", "embedding", n_seeds=1, threshold=0.999,
-        pairs="expr").collect()))
-    assert blocked == whole == expr
-    assert any(r[3] for r in blocked)  # dups exist at this threshold
+    whole = curation.semdedup(emb, "vec_id", "embedding", n_seeds=1,
+                              threshold=0.999).collect()
+    assert sorted(map(tuple, blocked)) == sorted(map(tuple, whole))
+    _assert_sem_matches(blocked, _sem_ref(rows, 1, 0.999))
+    assert any(r["removed"] for r in blocked)  # dups exist here
 
 
 def test_semdedup_block_env_is_validated(spark, monkeypatch):
@@ -342,7 +405,7 @@ def test_semdedup_block_env_is_validated(spark, monkeypatch):
         monkeypatch.setenv("SPARK_GRAFT_SEMDEDUP_BLOCK", bad)
         with pytest.raises(ValueError, match="SPARK_GRAFT_SEMDEDUP_BLOCK"):
             curation.semdedup(emb, "vec_id", "embedding", n_seeds=1,
-                              threshold=0.9, pairs="gemm").collect()
+                              threshold=0.9).collect()
 
 
 def test_semdedup_explicit_seeds_and_validation(spark):
@@ -646,25 +709,6 @@ try:
     _vec = st.lists(st.integers(1, 5), min_size=3, max_size=3)
     _vecsets = st.lists(_vec, min_size=2, max_size=10)
 
-    def _sem_ref(vecs, n_seeds, tau):
-        ids = list(range(len(vecs)))
-        seeds = ids[:n_seeds]
-        csim, cluster = {}, {}
-        for i in ids:
-            sims = {s: round(_cos(vecs[i], vecs[s]), 6) for s in seeds}
-            best = max(sims.values())
-            cluster[i] = min(s for s in seeds if sims[s] == best)
-            csim[i] = sims[cluster[i]]
-        removed = set()
-        for x in ids:
-            for y in ids:
-                if (x != y and cluster[x] == cluster[y]
-                        and round(_cos(vecs[x], vecs[y]), 4) >= tau
-                        and (csim[y] < csim[x]
-                             or (csim[y] == csim[x] and y < x))):
-                    removed.add(x)
-        return {i: (cluster[i], csim[i], i in removed) for i in ids}
-
     @settings(max_examples=8, deadline=None)
     @given(_vecsets)
     def test_semdedup_random_vectors_match_reference(vecs):
@@ -677,7 +721,7 @@ try:
                for r in curation.semdedup(emb, "vec_id", "embedding",
                                           n_seeds=2,
                                           threshold=0.99).collect()}
-        want = _sem_ref(vecs, min(2, len(vecs)), 0.99)
+        want = _sem_ref(list(enumerate(vecs)), min(2, len(vecs)), 0.99)
         assert set(got) == set(want), vecs
         for k in want:
             assert got[k][0] == want[k][0], (vecs, k)

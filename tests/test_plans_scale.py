@@ -545,16 +545,20 @@ def test_prefix_filter_jaccard_equals_naive(spark):
 
 
 def test_gemm_topk_equals_expression_topk(spark):
-    """The GEMM kernel must reproduce the expression-level brute force
-    exactly (rounded scores, id tiebreak)."""
+    """The grid GEMM top-k must reproduce the expression-level brute
+    force exactly (rounded scores, id tiebreak) whether the corpus is
+    one block (a single GEMM per query set) or hashed into four (local
+    top-k per cell, then the window merge)."""
     from unilever_scraping_etl_spark.operators.similarity import (
-        brute_force_topk, brute_force_topk_gemm)
+        brute_force_topk, brute_force_topk_grid)
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
-    a = brute_force_topk(queries, emb, k=5)
-    b = brute_force_topk_gemm(queries, emb, k=5)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+    want = sorted(map(tuple, brute_force_topk(queries, emb, k=5).collect()))
+    assert len(want) == 40
+    for n_blocks in (1, 4):
+        got = brute_force_topk_grid(queries, emb, k=5, n_blocks=n_blocks)
+        assert sorted(map(tuple, got.collect())) == want, n_blocks
 
 
 def test_connected_components_chain_triangle_singleton(spark):
@@ -762,14 +766,18 @@ def test_upsert_snapshot_replaces_only_touched_partitions(spark, tmp_path):
 
 def test_grid_gemm_pairs_equal_broadcast_gemm(spark):
     # the distributed block-grid path (no driver collect, no corpus
-    # broadcast) must produce byte-identical pairs to the broadcast
-    # kernel — same float64 GEMM, same rounding, same orientation.
+    # broadcast) must produce byte-identical pairs to the expression
+    # pair join, as one whole-corpus GEMM (1 block) and as a 4-block
+    # grid — same rounded cosines, same id_a < id_b orientation.
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    bc = {tuple(r) for r in dedup.embedding_near_pairs_gemm(
+    want = {tuple(r) for r in dedup.embedding_near_pairs(
         emb, "vec_id", "embedding", threshold=0.4).collect()}
-    gr = {tuple(r) for r in dedup.embedding_near_pairs_grid(
-        emb, "vec_id", "embedding", threshold=0.4, n_blocks=4).collect()}
-    assert bc == gr and len(gr) > 0
+    assert len(want) > 0
+    for n_blocks in (1, 4):
+        gr = {tuple(r) for r in dedup.embedding_near_pairs_grid(
+            emb, "vec_id", "embedding", threshold=0.4,
+            n_blocks=n_blocks).collect()}
+        assert gr == want, n_blocks
 
 
 def test_simhash_guard_identity_below_cap(spark):
@@ -929,18 +937,6 @@ def test_editdist_rejects_unkeyed_join(spark):
     plan = _plan(dedup.editdist_pairs(df, "id", "name", [], max_dist=2))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_grid_topk_equals_broadcast_topk(spark):
-    from unilever_scraping_etl_spark.operators import similarity
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    qs = emb.filter(F.col("vec_id") < 8)
-    bc = {tuple(r) for r in similarity.brute_force_topk_gemm(
-        qs, emb, k=5).collect()}
-    gr = {tuple(r) for r in similarity.brute_force_topk_grid(
-        qs, emb, k=5, n_blocks=4).collect()}
-    assert bc == gr and len(gr) == 40
 
 
 def test_grid_range_search_equals_broadcast_range_search(spark):
@@ -2237,12 +2233,12 @@ try:
         arbitrary small integer vectors (including zero vectors, which
         the kernel must score as cos 0 via the norm floor, and block
         counts that leave some grid cells empty): every (query,
-        neighbor, rounded-cos) pair with cos >= threshold, self
+        neighbor, oracle-rounded cos) pair with cos >= threshold, self
         excluded, independent of how the corpus hashes into blocks."""
         import numpy as _np
 
-        from unilever_scraping_etl_spark.operators.similarity import \
-            range_search_grid
+        from unilever_scraping_etl_spark.operators.similarity import (
+            _round_half_up, range_search_grid)
         from unilever_scraping_etl_spark.session import get_session
 
         spark = get_session("tests")
@@ -2255,7 +2251,7 @@ try:
 
         m = _np.array([v for _, v in rows], dtype="float64")
         m = m / _np.maximum(_np.linalg.norm(m, axis=1, keepdims=True), 1e-300)
-        sim = _np.round(m @ m.T, 4)
+        sim = _round_half_up(m @ m.T, 4)
         want = {(qi, ci, float(sim[qi, ci]))
                 for qi in range(len(rows)) if qi % 2 == 0
                 for ci in range(len(rows))

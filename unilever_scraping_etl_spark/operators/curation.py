@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from ..functions import vectors
 from ._contracts import env_int, require_free_columns
+from .similarity import _round_half_up
 
 _DSIR_RESERVED = ("__t", "__tgt", "__term", "__b", "__ct", "__cr", "__lr")
 
@@ -269,8 +270,7 @@ def semdedup(emb: DataFrame, id_col: str, vec_col: str,
              n_seeds: int = 8, threshold: float = 0.4,
              seeds: DataFrame | None = None,
              round_centroid: int = 6, round_pair: int = 4,
-             checkpoint: bool = True,
-             pairs: str = "gemm") -> DataFrame:
+             checkpoint: bool = True) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): assign every vector to its most
     similar cluster seed, compare pairs ONLY within a cluster, and
     mark as ``removed`` every member of a duplicate pair (rounded
@@ -295,28 +295,20 @@ def semdedup(emb: DataFrame, id_col: str, vec_col: str,
     The pair comparison runs ONLY within a cluster — SemDeDup's
     entire point is that clusters bound the quadratic term; a
     pathologically hot cluster should lower target cluster size
-    (more seeds). ``pairs`` selects its kernel (r16 OPTIMIZATION):
+    (more seeds). The pair stage is one Arrow-batched task per
+    cluster (grouped applyInPandas, _semdedup_prune_gemm) whose numpy
+    GEMM scores the block and emits each pair's loser directly — the
+    paper's own within-cluster matrix product. Measured at sf0.1
+    (2000 x 64, 8 clusters, r16 OPTIMIZATION): the pair stage fell
+    3.5 s -> 0.35 s against the former expression equi-join, whose
+    ~250k interpreted higher-order-function dot products (HOFs never
+    whole-stage-codegen) were the whole cost. The loser set is
+    unique per cluster by construction, so no cross-pair
+    ``distinct`` exchange is needed.
 
-    - ``"gemm"`` (default): one Arrow-batched task per cluster
-      (grouped applyInPandas) whose single numpy GEMM scores the
-      block and emits each pair's loser directly — the paper's own
-      within-cluster matrix product, and the engine's established
-      BLAS lane (dedup.embedding_near_pairs_grid has shipped the
-      same kernel family against the same sequential-fold oracle
-      since r9). Measured at sf0.1 (2000 x 64, 8 clusters): the
-      pair stage fell 3.5 s -> 0.35 s — the expression form's
-      ~250k interpreted higher-order-function dot products (HOFs
-      never whole-stage-codegen) were the whole cost. The loser set
-      is unique per cluster by construction, so the cross-pair
-      ``distinct`` exchange disappears too.
-    - ``"expr"``: the previous pure-expression equi-join kernel
-      (JVM-only row path; keep for plan-shape comparisons or
-      clusters too large for one task, where the caller should
-      REALLY be raising n_seeds).
-
-    Cosines divide the raw dot by the norm product in both kernels
-    (the oracle's exact op tree); the GEMM accumulates the dot in
-    fp64 BLAS order, which the round-4 threshold absorbs on every
+    Pair cosines divide the raw dot by the JVM-side norm product (the
+    oracle's exact op tree); the GEMM accumulates the dot in fp64
+    BLAS order, which the round-4 threshold absorbs on every
     measured corpus (same exposure as the grid-GEMM dedup queries,
     oracle-green at both scales). No driver collect anywhere. The
     assigned frame feeds multiple consumers and Spark does not
@@ -334,8 +326,6 @@ def semdedup(emb: DataFrame, id_col: str, vec_col: str,
         raise ValueError("n_seeds must be >= 1")
     if not 0.0 < threshold <= 1.0:
         raise ValueError("threshold must be in (0, 1]")
-    if pairs not in ("gemm", "expr"):
-        raise ValueError(f"pairs must be 'gemm' or 'expr', got {pairs!r}")
     # Hoist each vector's L2 norm into a per-row column computed ONCE:
     # cosine(a, b) = dot(a, b) / (norm(a) * norm(b)), and the norm
     # factors depend only on their own row — recomputing them per
@@ -380,37 +370,9 @@ def semdedup(emb: DataFrame, id_col: str, vec_col: str,
     if checkpoint:
         av = av.localCheckpoint()
         asg = av.select(id_col, "cluster_id", "centroid_sim")
-    if pairs == "gemm":
-        removed_ids = _semdedup_prune_gemm(av, id_col, float(threshold),
-                                           round_pair)
-    else:
-        a, b = av.alias("a"), av.alias("b")
-        # Hoisted-norm pair cosine (bit-identical to vectors.cosine:
-        # the dot is symmetric in its zip order and the norm product
-        # commutes).
-        pair_cos = (F.round(vectors.dot(F.col("a.__e"), F.col("b.__e"))
-                            / (F.col("a.__n") * F.col("b.__n")),
-                            round_pair))
-        # Each unordered pair is joined ONCE (id_a < id_b) — half the
-        # pair rows and half the pair cosines of the bidirectional
-        # form. Every qualifying pair removes exactly its LOSER: the
-        # member CLOSER to the centroid (keep-far rule), ties broken
-        # toward keeping the smaller id (so the loser of a tie is the
-        # larger id = b). The removed-id set is identical to the
-        # bidirectional form's, which marked `a` whenever its partner
-        # won.
-        loser = F.when(F.col("a.centroid_sim") > F.col("b.centroid_sim"),
-                       F.col(f"a.{id_col}")).otherwise(F.col(f"b.{id_col}"))
-        removed_ids = (a.join(b,
-                              (F.col("a.cluster_id")
-                               == F.col("b.cluster_id"))
-                              & (F.col(f"a.{id_col}")
-                                 < F.col(f"b.{id_col}")),
-                              "inner")
-                       .where(pair_cos >= F.lit(float(threshold)))
-                       .select(loser.alias(id_col))
-                       .distinct())
-    removed_ids = removed_ids.withColumn("removed", F.lit(True))
+    removed_ids = (_semdedup_prune_gemm(av, id_col, float(threshold),
+                                        round_pair)
+                   .withColumn("removed", F.lit(True)))
     return (asg.join(removed_ids, id_col, "left")
                .select(id_col, "cluster_id", "centroid_sim",
                        F.coalesce(F.col("removed"), F.lit(False))
@@ -427,23 +389,6 @@ as the grid-GEMM dedup kernels; override via
 ``SPARK_GRAFT_SEMDEDUP_BLOCK`` (an integer >= 1) for tighter workers."""
 
 
-def _round_half_up(x, digits: int):
-    """Round half AWAY FROM ZERO at ``digits`` decimals — the rounding
-    F.round applies JVM-side (HALF_UP on the double's decimal value)
-    and the one the DuckDB oracle uses, where numpy's np.round is
-    HALF_EVEN: a cosine landing exactly on a half at round_pair digits
-    (e.g. 0.40005 at 4) must round to the same side in both kernels or
-    the >= threshold decision silently diverges (r16 ADVICE, medium).
-    floor(|x|*10^d + 0.5) on the scaled double is HALF_UP wherever the
-    scaling is exact; the residual exposure is the double-rounding of
-    x*10^d itself — the same documented exposure dedup.py's GEMM
-    kernels carry, and orders rarer than the half-even/half-up
-    divergence this fixes."""
-    import numpy as np
-    scale = 10.0 ** digits
-    return np.sign(x) * np.floor(np.abs(x) * scale + 0.5) / scale
-
-
 def _semdedup_prune_gemm(av: DataFrame, id_col: str, threshold: float,
                          round_pair: int) -> DataFrame:
     """The within-cluster duplicate-pair loser set as one numpy GEMM
@@ -452,23 +397,21 @@ def _semdedup_prune_gemm(av: DataFrame, id_col: str, threshold: float,
     ``(id_col, cluster_id, centroid_sim, __e)``; output is one row per
     REMOVED id, already unique (clusters partition the ids and each
     kernel emits np.unique losers, so no cross-task distinct is
-    needed). Semantics mirror the expression kernel exactly: rows sort
-    by id inside the kernel, so for every in-cluster pair (i < j by
-    id) with round(dot/(n_i*n_j), round_pair) >= threshold the loser
-    is i when centroid_sim_i > centroid_sim_j else j (keep-far rule,
-    ties keep the smaller id); rounding is HALF_UP via _round_half_up
-    (matching F.round and the oracle — the only float-path difference
-    vs the expression kernel is the GEMM's dot accumulation order,
-    absorbed by round_pair on every measured corpus). Degenerate
-    inputs (r16 ADVICE): a NULL vector null-propagates in the
-    expression kernel (its pairs never qualify), so this kernel drops
-    such rows from the pair scan — they stay non-removed upstream. A
-    ZERO-NORM vector is a loud DIVIDE_BY_ZERO in the shared
-    assignment stage under ANSI mode (Spark 4's default — both
-    kernels fail identically before any pair runs); under non-ANSI
-    sessions Spark's Divide returns NULL instead, the expression
-    kernel again never qualifies the pair, and this kernel's isfinite
-    term mirrors that (numpy yields NaN/Inf where Spark yields NULL).
+    needed). Rows sort by id inside the kernel, so for every
+    in-cluster pair (i < j by id) with round(dot/(n_i*n_j),
+    round_pair) >= threshold the loser is i when centroid_sim_i >
+    centroid_sim_j else j (keep-far rule, ties keep the smaller id) —
+    the oracle's definition. Rounding is _round_half_up, the oracle's
+    round(DOUBLE, d); the only float-path difference from the oracle's
+    sequential-fold dot is the GEMM's accumulation order, absorbed by
+    round_pair on every measured corpus. Degenerate inputs (r16
+    ADVICE): a NULL vector has a NULL pair cosine in SQL (its pairs
+    never qualify), so this kernel drops such rows from the pair scan
+    — they stay non-removed upstream. A ZERO-NORM vector is a loud
+    DIVIDE_BY_ZERO in the assignment stage under ANSI mode (Spark 4's
+    default) before any pair runs; under non-ANSI sessions Spark's
+    Divide returns NULL instead, and this kernel's isfinite term
+    likewise never qualifies the pair (numpy yields NaN/Inf there).
 
     Memory per task: the cluster's rows plus ONE B x K block of the
     pair matrix (B = _SEMDEDUP_GEMM_BLOCK; clusters at or below B pay
@@ -487,9 +430,9 @@ def _semdedup_prune_gemm(av: DataFrame, id_col: str, threshold: float,
     block = env_int("SPARK_GRAFT_SEMDEDUP_BLOCK", _SEMDEDUP_GEMM_BLOCK, 1)
 
     def prune(pdf: pd.DataFrame) -> pd.DataFrame:
-        # NULL vectors null-propagate like the expression kernel: a
-        # pair with a NULL side has NULL cosine, which never passes
-        # the threshold filter — equivalent to dropping the row here.
+        # NULL vectors null-propagate as in SQL: a pair with a NULL
+        # side has NULL cosine, which never passes the threshold
+        # filter — equivalent to dropping the row here.
         pdf = pdf[pdf["__e"].notna() & pdf["__n"].notna()]
         if len(pdf) < 2:
             return pd.DataFrame({id_col: pdf[id_col][:0]})
@@ -499,8 +442,8 @@ def _semdedup_prune_gemm(av: DataFrame, id_col: str, threshold: float,
         m = np.vstack(pdf["__e"].to_numpy()).astype("float64")
         # __n is the JVM-side sequential-fold norm carried on the row —
         # reusing it (rather than renorming here) keeps the cosine's op
-        # tree identical to the expression kernel's dot/(n_i*n_j)
-        # except for the GEMM's dot accumulation order.
+        # tree identical to the oracle's dot/(n_i*n_j) except for the
+        # GEMM's dot accumulation order.
         n = pdf["__n"].to_numpy()
         loser_parts = []
         k = len(pdf)

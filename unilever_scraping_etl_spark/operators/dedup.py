@@ -24,6 +24,7 @@ from unilever_scraping_etl_spark.operators._fixpoint import (
     fixpoint,
     record,
 )
+from unilever_scraping_etl_spark.operators.similarity import _cosine
 
 
 def _shuffle_partitions(spark) -> int:
@@ -464,29 +465,6 @@ def editdist_pairs(df: DataFrame, id_col: str, text_col: str,
             .select("id_a", "id_b", F.col("dist").cast("int").alias("dist")))
 
 
-def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """64-bit SimHash: per token take xxhash64, then per bit position sum
-    +1/-1 across token occurrences; the sign of each sum is that bit of
-    the fingerprint. A per-document value, so computed as a NARROW MAP —
-    no explode, no shuffle: hash the token array once per row, then per
-    bit count set occurrences with a higher-order filter (bit set iff
-    2*count_set > n_tokens)."""
-    hashes = F.transform(F.split(F.lower(F.col(text_col)), " "),
-                         lambda t: F.xxhash64(t))
-    n = F.size(hashes)
-
-    def bit_set(mask):  # single-arg lambda factory (see minhash note)
-        return lambda h: h.bitwiseAND(mask) != 0
-
-    fp = None
-    for i in range(64):
-        mask = F.shiftleft(F.lit(1).cast("long"), i)
-        cnt = F.size(F.filter(hashes, bit_set(mask)))
-        bit = F.when(cnt * 2 > n, mask).otherwise(F.lit(0).cast("long"))
-        fp = bit if fp is None else fp.bitwiseOR(bit)
-    return df.select(F.col(id_col), fp.alias("simhash"))
-
-
 #: Executor-persistent token-hash memo for simhash64_arrow. Natural-language
 #: corpora reuse a small vocabulary, so across Arrow batches nearly every
 #: token is a cache hit and blake2b runs ~once per DISTINCT token per
@@ -502,12 +480,12 @@ def simhash64_arrow(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     dependence), memoized per distinct token, with the per-bit tally done
     as ONE numpy unpackbits + reduceat pass over the whole Arrow batch
     (segment boundaries = document token offsets) instead of a Python
-    loop per document. Same narrow-map plan shape as simhash64; the
+    loop per document. A narrow map (no explode, no shuffle); the
     round-1 per-document variant was Python-CPU-bound (~6.7 s at sf0.1),
     this batch form cuts the Python work to cache-miss hashing only. The
-    fingerprint DEFINITION is unchanged from round 1 (same token hash)
-    but differs from simhash64 (different token hash) — both are valid
-    SimHashes; pick one per corpus."""
+    fingerprint DEFINITION is unchanged from round 1 (same token hash):
+    per bit, the sign of the +1/-1 tally over the document's token
+    occurrences. The one SimHash the dedup family computes."""
     import hashlib
 
     import numpy as np
@@ -562,7 +540,7 @@ def simhash64_arrow(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def simhash_candidates(df: DataFrame, id_col: str, text_col: str,
-                       max_hamming: int = 3, use_arrow: bool = True,
+                       max_hamming: int = 3,
                        max_bucket_size: int | None = None) -> DataFrame:
     """SimHash candidate pairs BEFORE the hamming verify: band the
     64-bit fingerprint into ``max_hamming + 1`` chunks (pigeonhole:
@@ -574,8 +552,7 @@ def simhash_candidates(df: DataFrame, id_col: str, text_col: str,
     at any threshold — a fixed 4-chunk split is only complete for
     hamming <= 3. Returns (id_a, id_b, simhash_a, simhash_b) so the
     verifier needs no re-join of the fingerprint table."""
-    mk = simhash64_arrow if use_arrow else simhash64
-    fps = mk(df, id_col, text_col)
+    fps = simhash64_arrow(df, id_col, text_col)
     n_chunks = max_hamming + 1
     if not 1 <= max_hamming < 64:
         raise ValueError("max_hamming must be in [1, 63] for 64-bit simhash")
@@ -601,7 +578,6 @@ def simhash_candidates(df: DataFrame, id_col: str, text_col: str,
 
 def simhash_near_pairs(df: DataFrame, id_col: str, text_col: str,
                        max_hamming: int = 3,
-                       use_arrow: bool = True,
                        max_bucket_size: int | None = None) -> DataFrame:
     """Near-dup pairs by SimHash: simhash_candidates (pigeonhole chunk
     banding, optional hot-bucket guard) verified edge-by-edge with
@@ -625,7 +601,7 @@ def simhash_near_pairs(df: DataFrame, id_col: str, text_col: str,
     a cluster-split-intolerant call site, raise max_bucket_size or
     verify hub candidates before capping."""
     cand = simhash_candidates(df, id_col, text_col, max_hamming,
-                              use_arrow, max_bucket_size)
+                              max_bucket_size)
     # No trailing distinct: the candidates are DISTINCT by contract
     # (banded_pair_candidates) and hamming is a function of the carried
     # fingerprints, so a second dedup would only re-shuffle the pair
@@ -644,7 +620,7 @@ def embedding_near_pairs(emb: DataFrame, id_col: str, vec_col: str,
                          round_digits: int = 4) -> DataFrame:
     """Embedding-cosine near-dup pairs via an expression-level pair join.
     Oracle-identical float semantics (sequential fold dot product), but
-    O(pairs * dim) inside codegen — prefer embedding_near_pairs_gemm for
+    O(pairs * dim) inside codegen — prefer embedding_near_pairs_grid for
     bulk work. Pass ``block_col`` (e.g. an LSH bucket from
     similarity.hyperplane_bucket) to turn the cross into a blocked
     equi-join at production scale."""
@@ -711,11 +687,12 @@ def embedding_lsh_pairs(emb: DataFrame, id_col: str, vec_col: str,
     cos-pattern weights as the expression-level hyperplane_bucket), so
     the bucket step costs one BLAS call per batch instead of ~6k
     sequential expression ops per row. The exact-cosine verify is
-    likewise an Arrow-batched numpy kernel (normalize + row-wise dot,
-    the same kernel family as embedding_near_pairs_gemm, rounded BEFORE
-    thresholding) — on a clustered corpus the candidate set is a large
-    fraction of all pairs, and interpreted higher-order-function
-    cosines over it dominate the whole query.
+    likewise an Arrow-batched numpy kernel (similarity._cosine
+    row-wise: the same normalize, dot and rounding as
+    embedding_near_pairs_grid, rounded BEFORE thresholding) — on a
+    clustered corpus the candidate set is a large fraction of all
+    pairs, and interpreted higher-order-function cosines over it
+    dominate the whole query.
 
     Tuning is the standard LSH dial: more planes per band -> smaller
     buckets (candidate space ~ n_bands * N^2 / 2^n_planes per uniform
@@ -738,7 +715,6 @@ def embedding_lsh_pairs(emb: DataFrame, id_col: str, vec_col: str,
     true cosine is below threshold, so a below-threshold hub is
     possible). At a split-intolerant call site, raise max_bucket_size
     or verify hub candidates before capping."""
-    import numpy as np
     from pyspark.sql import types as T
 
     cand = hyperplane_lsh_candidates(emb, id_col, vec_col, n_bands,
@@ -768,20 +744,11 @@ def embedding_lsh_pairs(emb: DataFrame, id_col: str, vec_col: str,
         for pdf in batches:
             if pdf.empty:
                 continue
-            a = np.vstack(pdf["va"].to_numpy()).astype("float64")
-            b = np.vstack(pdf["vb"].to_numpy()).astype("float64")
-            a /= np.maximum(np.linalg.norm(a, axis=1, keepdims=True), 1e-300)
-            b /= np.maximum(np.linalg.norm(b, axis=1, keepdims=True), 1e-300)
-            raw = np.einsum("ij,ij->i", a, b)
-            # np.round (IEEE half-even), matching the EXACT companion
-            # kernels this output must be a subset of: the grid GEMM
-            # (embedding_near_pairs_grid, the registered dedup_embedding
-            # path) and the broadcast GEMM both round with np.round in
-            # the same numpy float64 kernel family. Emulating Spark's
-            # F.round here instead would diverge from them on half-even
-            # ties — the subset-of-exact property is defined against the
-            # numpy kernels, not against F.round.
-            cos = np.round(raw, round_digits)
+            # The same kernel as the exact grid GEMM this output must
+            # be a subset of (embedding_near_pairs_grid, the registered
+            # dedup_embedding path), so a pair on a rounding tie lands
+            # on the same side of the threshold in both.
+            cos = _cosine(pdf["va"], pdf["vb"], round_digits, rowwise=True)
             keep = cos >= threshold
             yield pd.DataFrame({
                 "id_a": pdf["id_a"].to_numpy()[keep].astype("int64"),
@@ -790,58 +757,6 @@ def embedding_lsh_pairs(emb: DataFrame, id_col: str, vec_col: str,
             })
 
     return paired.mapInPandas(verify, out_schema)
-
-
-def embedding_near_pairs_gemm(emb: DataFrame, id_col: str, vec_col: str,
-                              threshold: float = 0.95,
-                              round_digits: int = 4) -> DataFrame:
-    """Embedding-cosine near-dup pairs as a blocked matrix product: the
-    corpus is L2-normalized once, the smaller side is broadcast (here:
-    the whole corpus — a dim-table-sized 64-dim float matrix), and each
-    partition computes a numpy GEMM block against it, emitting only
-    pairs above threshold — one BLAS call per (partition x
-    broadcast-block) instead of 2 x dim array ops per pair.
-
-    Small-corpus fast path: at larger-than-broadcast sizes use
-    embedding_near_pairs_grid, which runs the identical kernel per
-    (block_i, block_j) cogroup cell with no driver collect (the
-    broadcast here is its degenerate 1-block grid; test-pinned
-    byte-identical)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    spark = emb.sparkSession
-    small = emb.select(id_col, vec_col).toPandas()
-    ids_all = small[id_col].to_numpy()
-    m_all = np.vstack(small[vec_col].to_numpy()).astype("float64")
-    m_all /= np.maximum(np.linalg.norm(m_all, axis=1, keepdims=True), 1e-300)
-    bc = spark.sparkContext.broadcast((ids_all, m_all))
-
-    out_schema = T.StructType([
-        T.StructField("id_a", T.LongType()),
-        T.StructField("id_b", T.LongType()),
-        T.StructField("cos", T.DoubleType()),
-    ])
-
-    def gen(batches):
-        ids_b, m_b = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids_a = pdf[id_col].to_numpy()
-            m_a = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
-            m_a /= np.maximum(np.linalg.norm(m_a, axis=1, keepdims=True), 1e-300)
-            sim = np.round(m_a @ m_b.T, round_digits)
-            ia, ib = np.nonzero(sim >= threshold)
-            keep = ids_a[ia] < ids_b[ib]
-            yield pd.DataFrame({
-                "id_a": ids_a[ia[keep]].astype("int64"),
-                "id_b": ids_b[ib[keep]].astype("int64"),
-                "cos": sim[ia[keep], ib[keep]],
-            })
-
-    return emb.select(id_col, vec_col).mapInPandas(gen, out_schema)
 
 
 _CC_LOCAL_EDGES_DEFAULT = 1_000_000
@@ -1175,16 +1090,18 @@ def _star_components(directed: DataFrame, max_iterations: int,
 def embedding_near_pairs_grid(emb: DataFrame, id_col: str, vec_col: str,
                               threshold: float = 0.95, n_blocks: int = 4,
                               round_digits: int = 4) -> DataFrame:
-    """Embedding-cosine near-pairs as a DISTRIBUTED block-grid GEMM —
-    the 100 TB form of embedding_near_pairs_gemm, with no driver-side
-    collect and no corpus broadcast. The corpus is hashed into
-    ``n_blocks`` blocks; every unordered block pair (ba <= bb) becomes
-    one cogroup task whose two pandas frames are the two blocks, scored
-    with a single numpy GEMM. Each row is shuffled to ~n_blocks grid
-    cells, so shuffle volume is O(N * n_blocks) — size n_blocks so one
-    block (N/n_blocks rows x dim floats) fits executor memory; the pair
-    space never materializes outside a task. Output is identical to the
-    broadcast variant (same float64 kernel, same rounding, id_a < id_b).
+    """Embedding-cosine near-pairs as a DISTRIBUTED block-grid GEMM,
+    with no driver-side collect and no corpus broadcast. The corpus is
+    hashed into ``n_blocks`` blocks; every unordered block pair
+    (ba <= bb) becomes one cogroup task whose two pandas frames are
+    the two blocks, scored with a single numpy GEMM. Each row is
+    shuffled to ~n_blocks grid cells, so shuffle volume is
+    O(N * n_blocks) — size n_blocks so one block (N/n_blocks rows x
+    dim floats) fits executor memory; the pair space never
+    materializes outside a task. Each cell scores with
+    similarity._cosine, so the output (id_a < id_b) does not depend on
+    ``n_blocks`` and, away from rounding ties, equals the expression
+    kernel embedding_near_pairs (test-pinned at 1 and 4 blocks).
     """
     import numpy as np
     from pyspark.sql import types as T
@@ -1210,11 +1127,7 @@ def embedding_near_pairs_grid(emb: DataFrame, id_col: str, vec_col: str,
             return pd.DataFrame({"id_a": [], "id_b": [], "cos": []})
         ids_l = lpdf["id"].to_numpy()
         ids_r = rpdf["id"].to_numpy()
-        ml = np.vstack(lpdf["v"].to_numpy()).astype("float64")
-        mr = np.vstack(rpdf["v"].to_numpy()).astype("float64")
-        ml /= np.maximum(np.linalg.norm(ml, axis=1, keepdims=True), 1e-300)
-        mr /= np.maximum(np.linalg.norm(mr, axis=1, keepdims=True), 1e-300)
-        sim = np.round(ml @ mr.T, round_digits)
+        sim = _cosine(lpdf["v"], rpdf["v"], round_digits)
         ia, ib = np.nonzero(sim >= threshold)
         la, rb = ids_l[ia], ids_r[ib]
         if key[0] == key[1]:

@@ -19,7 +19,43 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine, dot, norm
+from ..functions.vectors import dot, norm
+
+
+def _round_half_up(x, digits: int):
+    """Round half AWAY FROM ZERO at ``digits`` decimals, exactly as the
+    DuckDB oracle's ``round(DOUBLE, d)`` does: std::round(x * 10^d) /
+    10^d on the binary double. ``r + (a - r >= 0.5)`` with r =
+    floor(a) is that std::round exactly (``a - r`` is exact in
+    floating point), so 0.49999999999999994 at 0 digits gives 0.0,
+    where floor(a + 0.5) would give 1.0. numpy's np.round is
+    half-even instead: 0.125 at 2 digits gives 0.12 there and 0.13
+    here and in DuckDB.
+
+    This is NOT Spark's F.round, which rounds the double's SHORTEST
+    DECIMAL form half-up: F.round(0.285, 2) = 0.29 and
+    F.round(1.005, 2) = 1.01, while DuckDB and this function give
+    0.28 and 1.00 (the doubles are 0.28499.. and 1.00499..)."""
+    scale = 10.0 ** digits
+    a = np.abs(x) * scale
+    r = np.floor(a)
+    return np.sign(x) * (r + (a - r >= 0.5)) / scale
+
+
+def _cosine(a: pd.Series, b: pd.Series, round_digits: int,
+            rowwise: bool = False) -> np.ndarray:
+    """The numpy cosine kernel every Arrow-lane cosine operator shares:
+    stack each side's vectors to fp64 rows, L2-normalise them (the
+    norm is floored, so a zero vector scores cos 0.0, not NaN), then
+    score every row of ``a`` against every row of ``b`` with one GEMM
+    (a len(a) x len(b) matrix), or row i against row i when
+    ``rowwise``, and round with _round_half_up (the oracle's
+    rounding) BEFORE any threshold or ranking sees the score."""
+    ma, mb = (np.vstack(s.to_numpy()).astype("float64") for s in (a, b))
+    for m in (ma, mb):
+        m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-300)
+    raw = np.einsum("ij,ij->i", ma, mb) if rowwise else ma @ mb.T
+    return _round_half_up(raw, round_digits)
 
 
 def brute_force_topk(queries: DataFrame, corpus: DataFrame, k: int,
@@ -78,59 +114,6 @@ def range_search(queries: DataFrame, corpus: DataFrame, threshold: float,
                                         round_digits))
              .filter(F.col("cos") >= threshold)
              .select("query_id", "neighbor_id", "cos"))
-
-
-def brute_force_topk_gemm(queries: DataFrame, corpus: DataFrame, k: int,
-                          id_col: str = "vec_id", vec_col: str = "embedding",
-                          round_digits: int = 4) -> DataFrame:
-    """Exact top-k cosine as a blocked matrix product: the corpus is
-    L2-normalized once and broadcast; each partition of queries does ONE
-    numpy GEMM against it and emits its top-k rows. Same results as
-    brute_force_topk (rounded scores, id tiebreak) at a fraction of the
-    cost — per-pair expression work becomes a BLAS call per (partition x
-    corpus block). Small-corpus fast path: when the corpus outgrows a
-    broadcast, use brute_force_topk_grid — the same kernel per
-    (query x corpus-block) grid cell, no driver collect."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    spark = queries.sparkSession
-    small = corpus.select(id_col, vec_col).toPandas()
-    ids_all = small[id_col].to_numpy()
-    m_all = np.vstack(small[vec_col].to_numpy()).astype("float64")
-    m_all /= np.maximum(np.linalg.norm(m_all, axis=1, keepdims=True), 1e-300)
-    bc = spark.sparkContext.broadcast((ids_all, m_all))
-
-    out_schema = T.StructType([
-        T.StructField("query_id", T.LongType()),
-        T.StructField("neighbor_id", T.LongType()),
-        T.StructField("cos", T.DoubleType()),
-        T.StructField("rank", T.IntegerType()),
-    ])
-
-    def gen(batches):
-        ids_c, m_c = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids_q = pdf[id_col].to_numpy()
-            m_q = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
-            m_q /= np.maximum(np.linalg.norm(m_q, axis=1, keepdims=True), 1e-300)
-            sim = np.round(m_q @ m_c.T, round_digits)
-            for qi in range(len(ids_q)):
-                row = sim[qi]
-                mask = ids_c != ids_q[qi]          # exclude self
-                order = np.lexsort((ids_c[mask], -row[mask]))[:k]
-                nids = ids_c[mask][order]
-                yield pd.DataFrame({
-                    "query_id": np.full(len(order), ids_q[qi], dtype="int64"),
-                    "neighbor_id": nids.astype("int64"),
-                    "cos": row[mask][order],
-                    "rank": np.arange(1, len(order) + 1, dtype="int32"),
-                })
-
-    return queries.select(id_col, vec_col).mapInPandas(gen, out_schema)
 
 
 def assign_ivf_buckets(emb: DataFrame, nlist: int = 16,
@@ -318,19 +301,18 @@ def brute_force_topk_grid(queries: DataFrame, corpus: DataFrame, k: int,
                           n_blocks: int = 4, id_col: str = "vec_id",
                           vec_col: str = "embedding",
                           round_digits: int = 4) -> DataFrame:
-    """Exact top-k cosine at cluster scale — the distributed form of
-    brute_force_topk_gemm, with no driver collect and no corpus
-    broadcast. The corpus is hashed into ``n_blocks`` blocks; queries
-    replicate to every block (queries are the small side — replicating
-    the corpus instead would be the wrong orientation); each cogroup
-    cell GEMMs its corpus block against all queries and emits only its
-    LOCAL top-k per query, so the global merge (one window over
-    <= k * n_blocks candidate rows per query) is tiny. The union of
-    per-block top-k sets contains the global top-k, so results are
-    IDENTICAL to the broadcast variant: same kernel, same rounding,
-    same (cos desc, id) tiebreak."""
-    import numpy as np
-    import pandas as pd
+    """Exact top-k cosine at cluster scale, with no driver collect and
+    no corpus broadcast. The corpus is hashed into ``n_blocks``
+    blocks; queries replicate to every block (queries are the small
+    side — replicating the corpus instead would be the wrong
+    orientation); each cogroup cell GEMMs its corpus block against all
+    queries (_cosine) and emits only its LOCAL top-k per query, so the
+    global merge (one window over <= k * n_blocks candidate rows per
+    query) is tiny. The union of per-block top-k sets contains the
+    global top-k, so the result does not depend on ``n_blocks`` (a
+    1-block grid is one GEMM over the whole corpus) and equals
+    brute_force_topk's: same (cos desc, id) tiebreak, scores rounded
+    before ranking (test-pinned at 1 and 4 blocks)."""
     from pyspark.sql import types as T
 
     spark = queries.sparkSession
@@ -353,11 +335,7 @@ def brute_force_topk_grid(queries: DataFrame, corpus: DataFrame, k: int,
             return pd.DataFrame({"query_id": [], "neighbor_id": [], "cos": []})
         ids_q = qpdf["query_id"].to_numpy()
         ids_c = cpdf["nid"].to_numpy()
-        mq = np.vstack(qpdf["qv"].to_numpy()).astype("float64")
-        mc = np.vstack(cpdf["cv"].to_numpy()).astype("float64")
-        mq /= np.maximum(np.linalg.norm(mq, axis=1, keepdims=True), 1e-300)
-        mc /= np.maximum(np.linalg.norm(mc, axis=1, keepdims=True), 1e-300)
-        sim = np.round(mq @ mc.T, round_digits)
+        sim = _cosine(qpdf["qv"], cpdf["cv"], round_digits)
         frames = []
         for qi in range(len(ids_q)):
             row = sim[qi]
@@ -400,12 +378,10 @@ def range_search_grid(queries: DataFrame, corpus: DataFrame,
     the same DuckDB oracle covers both. Degenerate inputs diverge by
     design (r6 ADVICE): on a zero-norm vector the broadcast twin's
     expression-level cosine divides by zero -> NULL -> row filtered,
-    while this kernel's 1e-300 norm floor scores cos = 0.0, which a
-    threshold <= 0 would admit. The floor is the right scale behavior
-    (a zero embedding is a data bug, not a reason for NULL-sensitive
-    output); the equality pin is scoped accordingly."""
-    import numpy as np
-    import pandas as pd
+    while _cosine's norm floor scores cos = 0.0, which a threshold
+    <= 0 would admit. The floor is the right scale behavior (a zero
+    embedding is a data bug, not a reason for NULL-sensitive output);
+    the equality pin is scoped accordingly."""
     from pyspark.sql import types as T
 
     spark = queries.sparkSession
@@ -428,11 +404,7 @@ def range_search_grid(queries: DataFrame, corpus: DataFrame,
             return pd.DataFrame({"query_id": [], "neighbor_id": [], "cos": []})
         ids_q = qpdf["query_id"].to_numpy()
         ids_c = cpdf["nid"].to_numpy()
-        mq = np.vstack(qpdf["qv"].to_numpy()).astype("float64")
-        mc = np.vstack(cpdf["cv"].to_numpy()).astype("float64")
-        mq /= np.maximum(np.linalg.norm(mq, axis=1, keepdims=True), 1e-300)
-        mc /= np.maximum(np.linalg.norm(mc, axis=1, keepdims=True), 1e-300)
-        sim = np.round(mq @ mc.T, round_digits)
+        sim = _cosine(qpdf["qv"], cpdf["cv"], round_digits)
         keep = (sim >= threshold) & (ids_q[:, None] != ids_c[None, :])
         qi, ci = np.nonzero(keep)
         return pd.DataFrame({

@@ -1280,7 +1280,7 @@ FROM scored QUALIFY rank <= 5
          "the small side), one BLAS call + local top-k per cell, then "
          "a k*n_blocks-row window merge per query — no driver collect, "
          "no corpus broadcast; identical results to sim_topk (same "
-         "oracle; broadcast variant test-pinned byte-identical). "
+         "oracle; 1- and 4-block grids test-pinned equal to it). "
          "n_blocks is data-aware (adaptive_n_blocks over the corpus "
          "scan's Catalyst size estimate): 1 block at local scale, grid "
          "engaged above the 64 MB block budget.")
@@ -8220,9 +8220,9 @@ FROM asg LEFT JOIN rem ON asg.vec_id = rem.vec_id
          "Assignment is a broadcast nested loop over the 8-row seed "
          "frame (bounded BY CONSTRUCTION; k scales as corpus/target-"
          "cluster-size, never corpus-sized); the pair comparison is "
-         "an equi-join ON cluster_id — the clusters ARE SemDeDup's "
-         "bound on the quadratic term. JVM-side double cosines, "
-         "no driver collect, one row out per input vector.")
+         "one numpy GEMM per cluster (grouped applyInPandas) — the "
+         "clusters ARE SemDeDup's bound on the quadratic term. "
+         "No driver collect, one row out per input vector.")
 def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     return curation.semdedup(emb, "vec_id", "embedding",
