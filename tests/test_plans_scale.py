@@ -544,11 +544,7 @@ def test_prefix_filter_jaccard_equals_naive(spark):
         assert naive == pref, f"threshold {t}: {len(naive)} vs {len(pref)} pairs"
 
 
-def test_gemm_topk_equals_expression_topk(spark):
-    """The grid GEMM top-k must reproduce the expression-level brute
-    force exactly (rounded scores, id tiebreak) whether the corpus is
-    one block (a single GEMM per query set) or hashed into four (local
-    top-k per cell, then the window merge)."""
+def _topk_grid_vs_expression(spark, n_blocks):
     from unilever_scraping_etl_spark.operators.similarity import (
         brute_force_topk, brute_force_topk_grid)
 
@@ -556,9 +552,15 @@ def test_gemm_topk_equals_expression_topk(spark):
     queries = emb.filter(F.col("vec_id") < 8)
     want = sorted(map(tuple, brute_force_topk(queries, emb, k=5).collect()))
     assert len(want) == 40
-    for n_blocks in (1, 4):
-        got = brute_force_topk_grid(queries, emb, k=5, n_blocks=n_blocks)
-        assert sorted(map(tuple, got.collect())) == want, n_blocks
+    got = brute_force_topk_grid(queries, emb, k=5, n_blocks=n_blocks)
+    assert sorted(map(tuple, got.collect())) == want
+
+
+def test_gemm_topk_equals_expression_topk(spark):
+    """The grid top-k over a one-block corpus (a single GEMM per query
+    set) must reproduce the expression-level brute force exactly
+    (rounded scores, id tiebreak)."""
+    _topk_grid_vs_expression(spark, n_blocks=1)
 
 
 def test_connected_components_chain_triangle_singleton(spark):
@@ -937,6 +939,13 @@ def test_editdist_rejects_unkeyed_join(spark):
     plan = _plan(dedup.editdist_pairs(df, "id", "name", [], max_dist=2))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_grid_topk_equals_broadcast_topk(spark):
+    """The grid top-k with the corpus hashed into four blocks (local
+    top-k per cell, then the window merge) must equal the expression
+    top-k, which broadcasts the whole corpus."""
+    _topk_grid_vs_expression(spark, n_blocks=4)
 
 
 def test_grid_range_search_equals_broadcast_range_search(spark):
